@@ -232,26 +232,24 @@ def main() -> None:
     except Exception as exc:  # keep the headline metric intact
         print(f"# cdc_throughput: FAILED {exc}", file=sys.stderr)
 
-    # Streaming path, per-stage: a 10-micro-batch run of the real CDC
-    # stream (file source, 1 file per trigger) with decode / dedup /
-    # merge each timed inside foreachBatch — so a regression in any one
-    # streaming stage is visible round-over-round, not just the
-    # aggregate rows/s. Stage times overlap deliberately (merge performs
-    # its own dedup): each number tracks its stage's cost, they are not
-    # addends of total_sec.
+    # Streaming path: a 10-micro-batch run of the engine's own CDC stream
+    # (file source, 1 file per trigger) — readStream → decode_cdc_json →
+    # start_merge_stream → CdcBatchApplier.apply_batch into a
+    # merge-on-read target. Rows come from the query's progress events,
+    # so the measurement adds no Spark job; the per-stage split of a
+    # batch is the layer trace of `perfbench/run.py --trace 1`.
     streaming_block = None
     try:
         import shutil
         import tempfile
 
+        from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        from etl_stream_spark.cdc import ParquetMergeTable, last_writer_wins
-        from etl_stream_spark.sources.envelope_decode import decode_cdc_json
-
-        from pyspark.sql import functions as F
-
+        from etl_stream_spark.cdc import CdcBatchApplier, CdcTableConfig
         from etl_stream_spark.session import load_table
+        from etl_stream_spark.sinks.append import start_merge_stream
+        from etl_stream_spark.sources.envelope_decode import decode_cdc_json
 
         ev = load_table(spark, sf_dir, "events")
         op_code = (
@@ -291,87 +289,43 @@ def main() -> None:
             ]
         )
         # Same warm-up-then-measure protocol as cdc_rows_per_sec: the
-        # first full streaming run pays one-time costs this code path
-        # alone triggers (python worker pool for the decode UDF chain,
-        # codegen, first-touch of the checkpoint machinery) — measured
-        # ~6.1k rows/s cold vs ~10.5-11.8k warm on identical work, so a
-        # single cold run reports warm-up placement, not engine
-        # throughput. Pass 0 warms; the reported block is the better of
-        # the two measured passes (fresh target + checkpoint each pass,
-        # so no state leaks between them).
+        # first full streaming run pays one-time costs (codegen,
+        # first-touch of the checkpoint machinery), so a single cold run
+        # reports warm-up placement, not engine throughput. The reported
+        # block is the better of two passes (fresh target + checkpoint
+        # each pass, so no state leaks between them).
         for _pass in range(2):
-            # merge_on_read: the write-optimized streaming engine (L0
-            # delta appends, read-time resolution, counter-gated
-            # compaction) — the shape a 5-second-trigger CDC stream runs
-            # at 100 TB, where the eager per-batch join/rewrite constant
-            # dominated (BENCH_r03: merge was 72% of streaming wall)
             pass_root = os.path.join(root, f"pass{_pass}")
-            target = ParquetMergeTable(
+            applier = CdcBatchApplier(
                 spark,
-                os.path.join(pass_root, "target"),
-                keys=["user_id"],
-                num_buckets=32,
-                merge_on_read=True,
+                os.path.join(pass_root, "tables"),
+                {
+                    "events": CdcTableConfig(
+                        keys=["user_id"], num_buckets=32, merge_on_read=True
+                    )
+                },
             )
-            stage = {"decode_sec": 0.0, "dedup_sec": 0.0, "merge_sec": 0.0}
-            counters = {"rows": 0, "batches": 0}
-            # Account L0 drains separately: the counter-gated sweep
-            # lands inside ONE unlucky batch's merge() call, so folding
-            # it into merge_sec made round-over-round merge comparisons
-            # need a footnote every time the drain count per window
-            # shifted. merge_sec below is the steady-state append path;
-            # drain_sec is the amortized compaction work.
-            drain = {"sec": 0.0, "count": 0}
-            _orig_compact = target.compact
-
-            def _timed_compact():
-                tc = time.time()
-                _orig_compact()
-                drain["sec"] += time.time() - tc
-                drain["count"] += 1
-
-            target.compact = _timed_compact
-
-            def per_batch(batch, _eid):
-                t0 = time.time()
-                decoded = decode_cdc_json(batch, payload_schema).persist()
-                counters["rows"] += decoded.count()
-                t1 = time.time()
-                last_writer_wins(decoded, ["user_id"], "sequence").count()
-                t2 = time.time()
-                target.merge(decoded)
-                t3 = time.time()
-                decoded.unpersist()
-                stage["decode_sec"] += t1 - t0
-                stage["dedup_sec"] += t2 - t1
-                stage["merge_sec"] += t3 - t2
-                counters["batches"] += 1
-
-            t0 = time.time()
-            q = (
-                spark.readStream.schema(spark.read.parquet(src).schema)
+            events = decode_cdc_json(
+                spark.readStream.schema("value string")
                 .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .writeStream.foreachBatch(per_batch)
-                .option("checkpointLocation", os.path.join(pass_root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+                .parquet(src),
+                payload_schema,
+            )
+            t0 = time.time()
+            q = start_merge_stream(
+                events, applier, os.path.join(pass_root, "ckpt"), available_now=True
             )
             if not q.awaitTermination(600):
                 q.stop()
                 raise TimeoutError("streaming bench did not finish")
             total_sec = time.time() - t0
+            progress = [p for p in q.recentProgress if p.numInputRows > 0]
+            rows = sum(p.numInputRows for p in progress)
             candidate = {
-                "n_batches": counters["batches"],
-                "rows": counters["rows"],
-                "decode_sec": round(stage["decode_sec"], 3),
-                "dedup_sec": round(stage["dedup_sec"], 3),
-                # steady-state merge (L0 append path) vs amortized drain
-                "merge_sec": round(stage["merge_sec"] - drain["sec"], 3),
-                "drain_sec": round(drain["sec"], 3),
-                "n_drains": drain["count"],
+                "n_batches": len(progress),
+                "rows": rows,
                 "total_sec": round(total_sec, 3),
-                "rows_per_sec": round(counters["rows"] / total_sec, 1),
+                "rows_per_sec": round(rows / total_sec, 1),
             }
             if streaming_block is None or candidate["total_sec"] < streaming_block["total_sec"]:
                 streaming_block = candidate

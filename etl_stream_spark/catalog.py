@@ -4232,6 +4232,7 @@ def cdc_streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch → bucketed parquet MERGE target; returns the final
     merged state (G1-G5 through the actual merge machinery)."""
     from etl_stream_spark.cdc.pipeline import CdcBatchApplier, CdcTableConfig
+    from etl_stream_spark.sinks.append import start_merge_stream
 
     _ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
@@ -4261,11 +4262,8 @@ def cdc_streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         spark.read.parquet(src).schema
     ).parquet(src)
-    q = (
-        stream.writeStream.foreachBatch(lambda df, eid: applier.apply_batch(df, eid))
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    q = start_merge_stream(
+        stream, applier, os.path.join(root, "ckpt"), available_now=True
     )
     _await_or_raise(q, 600)
     state = applier.target("events_state").read()

@@ -9,7 +9,6 @@ from etl_stream_spark.cdc.envelope import (
     OP_INSERT,
     OP_TRUNCATE,
     OP_UPDATE,
-    effective_row,
     make_sequence,
     with_cdc_metadata,
 )
@@ -37,7 +36,6 @@ __all__ = [
     "MergeTask",
     "ParquetMergeTable",
     "apply_with_truncate_barrier",
-    "effective_row",
     "last_writer_wins",
     "last_writer_wins_agg",
     "Scd2Table",

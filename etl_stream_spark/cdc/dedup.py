@@ -43,7 +43,6 @@ def last_writer_wins(
     df: DataFrame,
     keys: Sequence[str],
     seq_col: str = SEQUENCE_COL,
-    keep_rank_col: bool = False,
     tie_break: F.Column | None = None,
 ) -> DataFrame:
     """Keep only the highest-sequence row per key.
@@ -68,8 +67,7 @@ def last_writer_wins(
         F.col(seq_col).desc(), tie_break.desc()
     )
     ranked = df.withColumn(DEDUPE_RANK_COL, F.row_number().over(w))
-    out = ranked.filter(F.col(DEDUPE_RANK_COL) == 1)
-    return out if keep_rank_col else out.drop(DEDUPE_RANK_COL)
+    return ranked.filter(F.col(DEDUPE_RANK_COL) == 1).drop(DEDUPE_RANK_COL)
 
 
 def last_writer_wins_agg(

@@ -1,4 +1,4 @@
-"""CDC envelope: metadata columns, delete-row projection, sequences.
+"""CDC envelope: metadata columns and sequences.
 
 Reference parity (SURVEY.md §1.3, §2.3):
 
@@ -8,7 +8,9 @@ Reference parity (SURVEY.md §1.3, §2.3):
 * DELETE events carry the *old* row — PK-only when the source lacks
   REPLICA IDENTITY FULL — so landing columns are all-nullable and the
   merge DELETE branch matches on PK alone
-  (``src/destination/snowflake_destination.rs:1675-1695``);
+  (``src/destination/snowflake_destination.rs:1675-1695``); the
+  before-image projection is part of
+  ``sources/envelope_decode.py::decode_cdc_json``;
 * sequence strings are ``<µs-epoch>_<row-index:08d>`` — equal-length,
   zero-padded, so lexicographic order == event order
   (``client.py:598-604``; SURVEY §7.3 risk 1).
@@ -63,17 +65,3 @@ def with_cdc_metadata(
         .withColumn(SEQUENCE_COL, seq_col)
         .withColumn(TIMESTAMP_COL, ts_col)
     )
-
-
-def effective_row(
-    df: DataFrame,
-    op_col: str = OPERATION_COL,
-    before_col: str = "before",
-    after_col: str = "after",
-) -> DataFrame:
-    """Delete-row projection (P3): DELETE events read the *before* image
-    (PK-only if that's all the source sent), everything else the *after*
-    image. The payload struct is then flattened to top-level columns."""
-    payload = F.when(F.col(op_col) == OP_DELETE, F.col(before_col)).otherwise(F.col(after_col))
-    passthrough = [c for c in df.columns if c not in (before_col, after_col)]
-    return df.select(*passthrough, payload.alias("_row")).select("*", "_row.*").drop("_row")

@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors.exceptions.captured import AnalysisException
 
-from etl_stream_spark.cdc.merge import _hadoop_fs
+from etl_stream_spark.l0_log import _hadoop_fs
 
 
 class ErasureList:

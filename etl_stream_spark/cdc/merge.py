@@ -47,8 +47,7 @@ from etl_stream_spark.cdc.envelope import (
     SEQUENCE_COL,
     TIMESTAMP_COL,
 )
-from etl_stream_spark.l0_log import (  # noqa: F401 — re-exported: every
-    # store imports these from here (the helpers' original home)
+from etl_stream_spark.l0_log import (
     L0AppendLog,
     _hadoop_fs,
     _hadoop_path,
@@ -442,17 +441,10 @@ class ParquetMergeTable:
         self._l0.append(delta)
         if stored is None or set(batch_data) - set(stored):
             self._save_stored_cols(set(stored or []) | set(batch_data))
-        self._maybe_compact()
-        return True
-
-    def _maybe_compact(self) -> None:
-        """Counter-gated compaction (the shared L0 sweep gate): see
-        :meth:`L0AppendLog.maybe_sweep` — restart-resumed counter, one
-        listing per threshold."""
+        # counter-gated compaction: restart-resumed counter, one
+        # listing per threshold
         self._l0.maybe_sweep(self.compact)
-
-    def _delta_files(self) -> list[str]:
-        return self._l0.files()
+        return True
 
     def compact(self) -> None:
         """Drain the L0 delta log into the bucket layout: resolve every
@@ -489,7 +481,7 @@ class ParquetMergeTable:
             resolved = resolved.filter(
                 ~F.coalesce(F.col(DELETED_COL), F.lit(False))
             ).drop(DELETED_COL)
-        self._write(resolved, full_overwrite=False, touched=touched)
+        self._write(resolved, touched=touched)
         self._l0.delete_files(l0_files)
 
     def _merge_deduped(self, deduped: DataFrame) -> None:
@@ -513,7 +505,7 @@ class ParquetMergeTable:
             result = first.withColumnRenamed(SEQUENCE_COL, SEQ_STATE_COL).drop(
                 OPERATION_COL
             )
-            self._write(result, full_overwrite=False)
+            self._write(result)
             return
 
         b = deduped.alias("b")
@@ -629,7 +621,7 @@ class ParquetMergeTable:
         result = joined.filter(keep).select(
             *key_exprs, *[pick(c) for c in non_key_data], seq_expr, bucket_expr, *extra
         )
-        self._write(result, full_overwrite=False, touched=touched)
+        self._write(result, touched=touched)
 
     def purge_keys(self, keys_df: DataFrame) -> int:
         """Compliance erasure (right-to-be-forgotten): physically remove
@@ -674,7 +666,7 @@ class ParquetMergeTable:
             if doomed == 0:
                 return 0
             kept = state.alias("t").join(purge.alias("p"), cond, "left_anti")
-            self._write(kept, full_overwrite=False, touched=touched)
+            self._write(kept, touched=touched)
             return doomed
         finally:
             purge.unpersist()
@@ -704,14 +696,9 @@ class ParquetMergeTable:
         if not touched:
             return
         kept = state.filter(F.col(BUCKET_COL).isin(touched)).filter(~doomed)
-        self._write(kept, full_overwrite=False, touched=touched)
+        self._write(kept, touched=touched)
 
-    def _write(
-        self,
-        df: DataFrame,
-        full_overwrite: bool,
-        touched: list[int] | None = None,
-    ) -> None:
+    def _write(self, df: DataFrame, touched: list[int] | None = None) -> None:
         """Commit the merged buckets.
 
         DURABILITY CONTRACT (documented, not transactional): the commit
@@ -742,10 +729,7 @@ class ParquetMergeTable:
             (
                 df.repartition(BUCKET_COL)
                 .write.mode("overwrite")
-                .option(
-                    "partitionOverwriteMode",
-                    "static" if full_overwrite else "dynamic",
-                )
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy(BUCKET_COL)
                 .parquet(self.path)
             )

@@ -19,13 +19,24 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors.exceptions.captured import AnalysisException
 
 from etl_stream_spark.cdc.envelope import OP_TRUNCATE, OPERATION_COL, SEQUENCE_COL
-from etl_stream_spark.cdc.merge import ParquetMergeTable, _hadoop_fs, _hadoop_path
+from etl_stream_spark.cdc.merge import ParquetMergeTable
+from etl_stream_spark.l0_log import (
+    _hadoop_fs,
+    _hadoop_path,
+    read_small_text,
+    write_small_text,
+)
 from etl_stream_spark.schema.identifiers import validate_identifier
+
+#: the column of a multi-table batch that names each row's table
+TABLE_COL = "table"
+#: per-table merges of one batch that run at once
+MAX_PARALLEL_TABLES = 4
 
 
 def apply_with_truncate_barrier(
@@ -92,8 +103,6 @@ class CdcBatchApplier:
         spark: SparkSession,
         base_path: str,
         tables: dict[str, CdcTableConfig],
-        table_col: str = "table",
-        max_parallel_tables: int = 4,
         metrics=None,
         rollups: dict[str, "IncrementalRollup"] | None = None,
         histories: dict[str, "Scd2Table"] | None = None,
@@ -112,8 +121,6 @@ class CdcBatchApplier:
         self.spark = spark
         self.base_path = base_path.rstrip("/")
         self.txn_app_id = txn_app_id
-        self.table_col = table_col
-        self.max_parallel_tables = max_parallel_tables
         self.metrics = metrics  # optional MetricsRegistry
         self.rollups = dict(rollups or {})  # table name → IncrementalRollup
         self.histories = dict(histories or {})  # table name → Scd2Table
@@ -151,14 +158,10 @@ class CdcBatchApplier:
         return f"{self.base_path}/{name}/_meta_epoch_{tag}.json"
 
     def _last_epoch(self, name: str) -> int | None:
-        from etl_stream_spark.cdc.merge import read_small_text
-
         text = read_small_text(self.spark, self._epoch_path(name))
         return None if text is None else int(text)
 
     def _set_last_epoch(self, name: str, epoch_id: int) -> None:
-        from etl_stream_spark.cdc.merge import write_small_text
-
         write_small_text(self.spark, self._epoch_path(name), str(int(epoch_id)))
 
     def read_quarantine(self, name: str) -> DataFrame | None:
@@ -178,7 +181,7 @@ class CdcBatchApplier:
         # the per-table barrier and the rollup's has-truncate probe don't
         # each re-execute the batch lineage.
         meta = (
-            events.groupBy(self.table_col)
+            events.groupBy(TABLE_COL)
             .agg(
                 F.collect_set(
                     F.when(
@@ -208,7 +211,7 @@ class CdcBatchApplier:
                 applied = self._last_epoch(name)
                 if applied is not None and epoch_id <= applied:
                     return
-            per_table = events.filter(F.col(self.table_col) == name).drop(self.table_col)
+            per_table = events.filter(F.col(TABLE_COL) == name).drop(TABLE_COL)
             # Right-to-be-forgotten suppression: erased keys never reach
             # the merge, the history, OR the quarantine — even on replays
             # (cdc/erasure.py). One FS existence check per table per
@@ -226,13 +229,18 @@ class CdcBatchApplier:
                 trunc = per_table.filter(F.col(OPERATION_COL) == OP_TRUNCATE)
                 valid, quarantined = split(data, exps)
                 # park rejects BEFORE the merge so a crash cannot lose
-                # them; append-only, replayable after repair
-                quarantined.write.mode("append").parquet(
-                    f"{self.base_path}/_quarantine/{name}"
-                )
+                # them; append-only, replayable after repair. The
+                # observation counts the parked rows inside the write's
+                # own job.
+                parked = Observation()
+                quarantined.observe(parked, F.count(F.lit(1)).alias("rows")).write.mode(
+                    "append"
+                ).parquet(f"{self.base_path}/_quarantine/{name}")
                 if self.metrics is not None:
                     self.metrics.inc(
-                        "cdc_rows_quarantined_total", labels={"table": name}
+                        "cdc_rows_quarantined_total",
+                        float(parked.get["rows"]),
+                        labels={"table": name},
                     )
                 per_table = valid.unionByName(trunc, allowMissingColumns=True)
             trunc_seqs = trunc_by_table.get(name, [])
@@ -263,11 +271,10 @@ class CdcBatchApplier:
             if self.metrics is not None:
                 self.metrics.inc("cdc_batches_applied_total", labels={"table": name})
 
-        if len(names) == 1 or self.max_parallel_tables <= 1:
-            for n in names:
-                run(n)
+        if len(names) == 1:
+            run(names[0])
         else:
-            with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as pool:
+            with ThreadPoolExecutor(max_workers=MAX_PARALLEL_TABLES) as pool:
                 list(pool.map(run, names))
 
         # Sequential view-maintenance phase: each join view sees the
@@ -277,7 +284,7 @@ class CdcBatchApplier:
         # (The fused discovery pass already knows which tables carried
         # truncates — no per-view re-scan of the batch lineage.)
         def _per(name: str) -> DataFrame:
-            return events.filter(F.col(self.table_col) == name).drop(self.table_col)
+            return events.filter(F.col(TABLE_COL) == name).drop(TABLE_COL)
 
         for view, fact_name, dim_name in self.join_views:
             fact_per = _per(fact_name) if fact_name in names else None

@@ -38,13 +38,28 @@ hot keys at scale).
 from __future__ import annotations
 
 import math
+from fractions import Fraction
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.partitioning import ensure_parallelism
+
+
+def _at_least_phi(count: Column, n: Column, phi: float) -> Column:
+    """``count >= ceil(phi * n)`` in exact arithmetic. For an integer
+    count that is ``count >= phi * n``, i.e. ``count * den >= num * n``
+    with ``phi = num / den`` read from its decimal spelling, as the
+    DuckDB oracles' DECIMAL literal reads it (a float product rounds:
+    ``0.07 * 100`` is ``7.000000000000001``). decimal(38,0) keeps both
+    products exact."""
+    q = Fraction(str(phi))
+    dec = "decimal(38,0)"
+    return count.cast(dec) * F.lit(q.denominator).cast(dec) >= (
+        F.lit(q.numerator).cast(dec) * n.cast(dec)
+    )
 
 
 def _mg_update(counters: dict, item, capacity: int, w: int = 1) -> None:
@@ -155,7 +170,7 @@ def mg_hot_candidates(
     total = summary.filter(F.col("item").isNull()).agg(F.sum("n").alias("_n"))
     return (
         cand.crossJoin(F.broadcast(total))
-        .filter(F.col("_c") >= F.ceil(F.lit(float(phi)) * F.col("_n")))
+        .filter(_at_least_phi(F.col("_c"), F.col("_n"), phi))
         .select("item")
     )
 
@@ -220,7 +235,7 @@ def heavy_hitters(
     total = summary.filter(F.col("item").isNull()).agg(F.sum("n").alias("_n"))
     return (
         counts.crossJoin(F.broadcast(total))
-        .filter(F.col("cnt") >= F.ceil(F.lit(float(phi)) * F.col("_n")))
+        .filter(_at_least_phi(F.col("cnt"), F.col("_n"), phi))
         .select(
             "item",
             F.col("cnt").cast("bigint").alias("cnt"),

@@ -28,12 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_stream_spark.cdc.envelope import OPERATION_COL, SEQUENCE_COL
-from etl_stream_spark.cdc.merge import (
-    BUCKET_COL,
-    ParquetMergeTable,
-    read_small_text,
-    write_small_text,
-)
+from etl_stream_spark.cdc.merge import BUCKET_COL, ParquetMergeTable
+from etl_stream_spark.l0_log import read_small_text, write_small_text
 
 FP_COL = "fp"
 

@@ -233,7 +233,7 @@ class PostingsIndex:
     def _gen(self) -> int:
         # driver-side FS file, not a parquet dataset: a Spark job per
         # generation read/bump would dominate small upserts
-        from etl_stream_spark.cdc.merge import read_small_text
+        from etl_stream_spark.l0_log import read_small_text
 
         text = read_small_text(self.spark, self._meta_path)
         if text is not None:
@@ -250,7 +250,7 @@ class PostingsIndex:
             return 0
 
     def _set_gen(self, g: int) -> None:
-        from etl_stream_spark.cdc.merge import write_small_text
+        from etl_stream_spark.l0_log import write_small_text
 
         write_small_text(self.spark, self._meta_path, str(int(g)))
 

@@ -50,7 +50,7 @@ def replace_parquet_files(spark: SparkSession, base_path: str, files, keep) -> N
     protocol): rows appended during the rewrite are never touched.
     Crash window: before the deletes, retained rows exist twice —
     recovery is re-running the same rewrite."""
-    from etl_stream_spark.cdc.merge import _hadoop_fs, _hadoop_path
+    from etl_stream_spark.l0_log import _hadoop_fs, _hadoop_path
 
     files = list(files)
     if not files:

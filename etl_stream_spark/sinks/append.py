@@ -60,7 +60,10 @@ def start_merge_stream(
 ) -> StreamingQuery:
     """CDC merge stream (K2 analog): every micro-batch is grouped by
     table, deduped last-writer-wins, and MERGEd into its target —
-    exactly-once via the checkpoint + idempotent stale-sequence guard."""
+    exactly-once via the checkpoint + idempotent stale-sequence guard.
+    The one place a stream is connected to
+    :meth:`CdcBatchApplier.apply_batch` (the catalog's streaming merge
+    and ``bench.py`` both start their streams here)."""
     writer = events.writeStream.foreachBatch(applier.apply_batch).option(
         "checkpointLocation", checkpoint
     )

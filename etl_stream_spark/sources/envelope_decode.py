@@ -22,7 +22,6 @@ lexicographic order == commit order.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_stream_spark.cdc.envelope import (
@@ -73,67 +72,29 @@ def decode_cdc_json(
 
     Plan-construction cost is part of this function's contract: it runs
     once per MICRO-BATCH inside foreachBatch, and the previous
-    withColumn-chain + ``effective_row`` form (which calls
-    ``df.columns``, forcing a driver-side analysis mid-construction)
-    measured ~330 ms of pure driver work per 10k-row batch — ~45% of
-    the whole decode stage (round-9 probe). The envelope struct is
+    withColumn-chain form (which called ``df.columns`` to flatten the
+    payload, forcing a driver-side analysis mid-construction) measured
+    ~330 ms of pure driver work per 10k-row batch — ~45% of the whole
+    decode stage (round-9 probe). The envelope struct is
     bound to a column in its own projection so the JSON parse runs once
     per row (CollapseProject does not inline a non-cheap multi-ref
     alias — the round-8 tokenize-once rule); the payload fields come
-    from ``payload_schema`` directly, never from ``df.columns``."""
-    if _sql_unsafe(payload_schema, value_col):
-        return _decode_via_columns(raw, payload_schema, value_col)
+    from ``payload_schema`` directly, never from ``df.columns``. Every
+    field name and metadata value is escaped into the SQL strings, so
+    this one plan serves any schema."""
     parse, flt, sel = _decode_exprs(payload_schema, value_col)
     return raw.selectExpr(parse).filter(flt).selectExpr(*sel)
 
 
-def _sql_unsafe(payload_schema: T.StructType, value_col: str) -> bool:
-    """True when embedding this schema/column in SQL string literals
-    could mis-parse: a quote or backslash anywhere in the schema's JSON
-    form (field names OR metadata), or a backtick/quote in an
-    identifier. Such inputs take the Column-object path — slower to
-    construct, immune to quoting."""
-    schema_str = cdc_envelope_schema(payload_schema).json()
-    if "'" in schema_str or "\\" in schema_str:
-        return True
-    return any(
-        ("`" in ident) or ("'" in ident)
-        for ident in [value_col, *payload_schema.fieldNames()]
-    )
+def _sql_string(text: str) -> str:
+    """``text`` as a Spark SQL string literal (backslash escapes are on
+    by default, so both the backslash and the quote are escaped)."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _decode_via_columns(
-    raw: DataFrame, payload_schema: T.StructType, value_col: str
-) -> DataFrame:
-    """Column-object twin of the SQL-string plan (same two projections,
-    same one bound parse, same output): the fallback for field names /
-    metadata the SQL-literal form cannot safely embed."""
-    from etl_stream_spark.cdc.envelope import (
-        OPERATION_COL,
-        SEQUENCE_COL,
-        TIMESTAMP_COL,
-    )
-    from etl_stream_spark.functions.sequences import lsn_sequence_expr
-
-    env = raw.select(
-        F.from_json(
-            F.col(value_col).cast("string"), cdc_envelope_schema(payload_schema)
-        ).alias("e")
-    )
-    op = F.col("e.op")
-    mapped = None
-    for code, name in _OP_MAP.items():
-        mapped = F.when(op == code, name) if mapped is None else mapped.when(op == code, name)
-    payload = F.when(op == F.lit("d"), F.col("e.before")).otherwise(F.col("e.after"))
-    return env.filter(op.isin(*_OP_MAP)).select(
-        F.col("e.source.table").alias("table"),
-        mapped.alias(OPERATION_COL),
-        lsn_sequence_expr(F.col("e.source.lsn"), F.col("e.source.lsn")).alias(
-            SEQUENCE_COL
-        ),
-        F.timestamp_millis(F.col("e.ts_ms")).alias(TIMESTAMP_COL),
-        *[payload.getField(f).alias(f) for f in payload_schema.fieldNames()],
-    )
+def _sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 #: (payload_schema.json(), value_col) → prepared SQL expression strings.
@@ -149,7 +110,8 @@ def _decode_exprs(
     ~200 ms); three ``selectExpr``/``filter`` string calls cost four.
     The strings are pure functions of the payload schema, so the cache
     key is the schema's JSON form (also what ``from_json`` is handed —
-    JSON survives any field name that JSON itself can encode)."""
+    JSON survives any field name that JSON itself can encode, and the
+    literal and identifier escaping carries it into SQL unchanged)."""
     from etl_stream_spark.cdc.envelope import (
         OPERATION_COL,
         SEQUENCE_COL,
@@ -162,7 +124,10 @@ def _decode_exprs(
     if got is not None:
         return got
     schema_str = cdc_envelope_schema(payload_schema).json()
-    parse = f"from_json(cast(`{value_col}` as string), '{schema_str}') AS e"
+    parse = (
+        f"from_json(cast({_sql_ident(value_col)} as string), "
+        f"{_sql_string(schema_str)}) AS e"
+    )
     codes = ", ".join(f"'{c}'" for c in _OP_MAP)
     # NULL op fails IN too, so one filter covers both legacy filters
     # (op non-null AND op maps to a known operation)
@@ -188,7 +153,10 @@ def _decode_exprs(
         f"{mapped} AS `{OPERATION_COL}`",
         f"{seq} AS `{SEQUENCE_COL}`",
         f"timestamp_millis(e.ts_ms) AS `{TIMESTAMP_COL}`",
-        *[f"{payload}.`{f}` AS `{f}`" for f in payload_schema.fieldNames()],
+        *[
+            f"{payload}.{_sql_ident(f)} AS {_sql_ident(f)}"
+            for f in payload_schema.fieldNames()
+        ],
     ]
     got = (parse, flt, sel)
     _DECODE_EXPR_CACHE[key] = got
@@ -209,22 +177,21 @@ def decode_cdc_json_with_dlq(
     an append-only audit table — the reference logs-and-skips,
     losing the rows; SURVEY §2.3 P1).
     """
-    # from_json is PERMISSIVE: malformed input yields an all-null struct,
-    # not NULL — try_parse_json distinguishes truly unparseable bytes
-    parsed = raw.withColumn(
-        "_e",
-        F.from_json(
-            F.col(value_col).cast("string"), cdc_envelope_schema(payload_schema)
-        ),
-    ).withColumn("_json_ok", F.expr(f"try_parse_json(cast({value_col} as string))").isNotNull())
-    known_ops = list(_OP_MAP.keys())
-    ok = F.col("_json_ok") & F.col("_e.op").isNotNull() & F.col("_e.op").isin(*known_ops)
-    bad = parsed.filter(~ok).select(
-        F.col(value_col).cast("string").alias("raw_value"),
-        F.when(~F.col("_json_ok"), "unparseable_json")
-        .when(F.col("_e.op").isNull(), "missing_op")
-        .otherwise("unknown_op")
-        .alias("reason"),
+    parse, flt, sel = _decode_exprs(payload_schema, value_col)
+    value = f"cast({_sql_ident(value_col)} as string)"
+    # the same bound envelope ``e`` feeds both sides, so a good row's
+    # JSON is parsed once, as in decode_cdc_json. from_json is
+    # PERMISSIVE: malformed input yields an all-null struct, not NULL —
+    # try_parse_json tells truly unparseable bytes apart
+    bound = raw.selectExpr(
+        parse,
+        f"{value} AS raw_value",
+        f"try_parse_json({value}) IS NOT NULL AS _json_ok",
     )
-    good = parsed.filter(ok).drop("_e", "_json_ok")
-    return decode_cdc_json(good, payload_schema, value_col), bad
+    ok = f"_json_ok AND coalesce({flt}, false)"
+    bad = bound.filter(f"NOT ({ok})").selectExpr(
+        "raw_value",
+        "CASE WHEN NOT _json_ok THEN 'unparseable_json' "
+        "WHEN e.op IS NULL THEN 'missing_op' ELSE 'unknown_op' END AS reason",
+    )
+    return bound.filter(ok).selectExpr(*sel), bad

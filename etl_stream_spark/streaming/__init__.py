@@ -14,7 +14,7 @@ from etl_stream_spark.streaming.resilience import (
     CircuitOpenError,
     retry_with_backoff,
 )
-from etl_stream_spark.streaming.monitor import ProgressCapture, wal_size_mb
+from etl_stream_spark.streaming.monitor import wal_size_mb
 
 __all__ = [
     "PipelineManager",
@@ -26,7 +26,6 @@ __all__ = [
     "CircuitBreaker",
     "CircuitOpenError",
     "retry_with_backoff",
-    "ProgressCapture",
     "wal_size_mb",
 ]
 

@@ -10,10 +10,12 @@ State machine semantics of ``src/alert_manager.rs:20-43,113-177``:
   (WARNING/DANGER), it has been sustained ≥ ``sustain_mins`` (default
   10, ``src/config.rs:25``), and no alert was sent this episode.
 
-Two forms: :class:`AlertStateMachine` — the plain, deterministic core —
-and :func:`sustained_threshold_alerts`, which lifts it onto a keyed
-stream with ``applyInPandasWithState`` (one state row per source; scales
-to any number of monitored sources because state is partitioned by key).
+:class:`AlertStateMachine` is the plain, deterministic core.
+:func:`sustained_threshold_alerts` lifts it onto a keyed stream with
+``applyInPandasWithState`` (one state row per source; scales to any
+number of monitored sources because state is partitioned by key) and
+fires when an observation arrives; :func:`sustained_threshold_alerts_timeout`
+adds a processing-time timeout, so a source that goes quiet still fires.
 """
 
 from __future__ import annotations
@@ -180,7 +182,7 @@ def sustained_threshold_alerts_timeout(
     when the source goes quiet, the behavior of the reference's
     duration check (``src/alert_manager.rs:113-177``), without needing
     the ``transformWithStateInPandas`` runtime (whose Python worker
-    requires protobuf; see ``alerting_timers.py``).
+    requires protobuf).
 
     Mechanics: a key entering WARNING/DANGER arms a timeout for the
     remaining sustain duration; a status change re-arms it, NORMAL
@@ -188,13 +190,7 @@ def sustained_threshold_alerts_timeout(
     tiny state row per source, partitioned by key.
     """
     sustain_ms = int(sustain_mins * 60_000)
-
-    def classify(mb: float) -> str:
-        if mb >= danger_mb:
-            return AlertStatus.DANGER
-        if mb >= warning_mb:
-            return AlertStatus.WARNING
-        return AlertStatus.NORMAL
+    classify = AlertStateMachine(warning_mb, danger_mb, sustain_mins).classify
 
     def fn(key: tuple, pdfs, state: GroupState):
         source = key[0]

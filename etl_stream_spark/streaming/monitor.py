@@ -1,21 +1,17 @@
-"""Lag/size monitoring (S6/G7 analog) and progress capture.
+"""Lag/size monitoring (S6/G7 analog).
 
 The reference polls ``SELECT sum(size) FROM pg_ls_waldir()`` per source
 (``src/wal_monitor.rs:326-342``) to feed the alert state machine. The
 Spark-native signals are (a) the same aggregation over any
 (source, size) table and (b) ``StreamingQueryProgress`` — rows/sec,
-batch durations, state size — captured via a listener.
+batch durations, state size — which
+``streaming/progress.py::ProgressMetricsListener`` exports.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # StreamingQueryListener import path (PySpark >= 3.4)
-    from pyspark.sql.streaming import StreamingQueryListener
-except ImportError:  # pragma: no cover
-    StreamingQueryListener = object  # type: ignore[assignment,misc]
 
 BYTES_PER_MB = 1024 * 1024
 
@@ -28,33 +24,3 @@ def wal_size_mb(
     return sizes.groupBy(source_col).agg(
         (F.sum(size_col) / F.lit(BYTES_PER_MB)).alias("wal_size_mb")
     )
-
-
-class ProgressCapture(StreamingQueryListener):
-    """Collects per-batch progress metrics for monitoring/backpressure
-    decisions (the ``StreamingQueryProgress`` analog of WAL polling)."""
-
-    def __init__(self) -> None:
-        self.progress: list[dict] = []
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        self.progress.append(
-            {
-                "id": str(p.id),
-                "batchId": p.batchId,
-                "numInputRows": p.numInputRows,
-                "inputRowsPerSecond": p.inputRowsPerSecond,
-                "processedRowsPerSecond": p.processedRowsPerSecond,
-                "durationMs": dict(p.durationMs) if p.durationMs else {},
-            }
-        )
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass

@@ -14,7 +14,7 @@ from etl_stream_spark.cdc import (
     last_writer_wins,
     make_sequence,
 )
-from etl_stream_spark.cdc.envelope import effective_row, sequence_expr, with_cdc_metadata
+from etl_stream_spark.cdc.envelope import sequence_expr, with_cdc_metadata
 from etl_stream_spark.cdc.pipeline import (
     CdcBatchApplier,
     CdcTableConfig,
@@ -65,19 +65,6 @@ class TestEnvelope:
         df = spark.createDataFrame([(1, "a")], "id long, v string")
         out = with_cdc_metadata(df, F.lit("INSERT"), F.lit("1_0"))
         assert set(out.columns) == {"id", "v", "operation", "sequence", "cdc_timestamp"}
-
-    def test_effective_row_delete_uses_before(self, spark):
-        df = spark.createDataFrame(
-            [
-                ("INSERT", "2", None, {"id": 1, "v": "new"}),
-                ("DELETE", "3", {"id": 1, "v": None}, None),
-            ],
-            "operation string, sequence string, before struct<id:long,v:string>, "
-            "after struct<id:long,v:string>",
-        )
-        rows = {r["sequence"]: r for r in effective_row(df).collect()}
-        assert rows["2"]["v"] == "new"
-        assert rows["3"]["id"] == 1 and rows["3"]["v"] is None
 
 
 class TestDedup:
@@ -572,7 +559,7 @@ class TestSmallTextAtomicity:
     old content or the new, never a partial file."""
 
     def test_overwrite_roundtrip_and_no_tmp_residue(self, spark, tmp_path):
-        from etl_stream_spark.cdc.merge import read_small_text, write_small_text
+        from etl_stream_spark.l0_log import read_small_text, write_small_text
 
         p = str(tmp_path / "meta" / "gen.txt")
         assert read_small_text(spark, p) is None
@@ -588,7 +575,7 @@ class TestSmallTextAtomicity:
         """Simulate dying after the temp write: the destination keeps
         its committed content; a later successful write supersedes the
         orphaned temp file rather than tripping over it."""
-        from etl_stream_spark.cdc.merge import read_small_text, write_small_text
+        from etl_stream_spark.l0_log import read_small_text, write_small_text
 
         p = str(tmp_path / "gen.txt")
         write_small_text(spark, p, "42")
@@ -607,7 +594,7 @@ class TestSmallTextAtomicity:
         up and supersedes it."""
         import os
 
-        from etl_stream_spark.cdc.merge import read_small_text, write_small_text
+        from etl_stream_spark.l0_log import read_small_text, write_small_text
 
         p = str(tmp_path / "gen.txt")
         write_small_text(spark, p, "7")
@@ -673,7 +660,7 @@ class TestMergeOnRead:
         t.merge(narrow)  # qty absent from batch schema → eager fallback
         assert state_dict(t) == {1: ("b", 7)}  # qty kept from target
         # the fallback drained L0: no deltas left to resurrect anything
-        assert t._delta_files() == []
+        assert t._l0.files() == []
 
     def test_compaction_bounds_files_and_preserves_state(self, spark, tmp_path):
         t = self._mor(spark, tmp_path, threshold=2)
@@ -681,7 +668,7 @@ class TestMergeOnRead:
             t.merge(make_batch(spark, [ev(1 + i % 3, f"v{i}", i, OP_UPDATE, i)]))
         assert state_dict(t) == {1: ("v6", 6), 2: ("v4", 4), 3: ("v5", 5)}
         # the counter-gated sweep kept L0 bounded
-        assert len(t._delta_files()) <= 2 * (t.compact_threshold + 1)
+        assert len(t._l0.files()) <= 2 * (t.compact_threshold + 1)
 
     def test_sweep_fires_at_same_append_count_across_restarts(self, spark, tmp_path):
         """The sweep counter seeds itself from the surviving L0 file
@@ -714,7 +701,7 @@ class TestMergeOnRead:
                 t.merge(
                     make_batch(spark, [ev(i, f"v{i}", i, OP_UPDATE, i)]).coalesce(1)
                 )
-                if not t._delta_files():
+                if not t._l0.files():
                     drained_at.append(i)
             return t, drained_at
 
@@ -733,7 +720,7 @@ class TestMergeOnRead:
         removed = t.purge_keys(spark.createDataFrame([(1,)], "id long"))
         assert removed == 1
         assert state_dict(t) == {2: ("keep", 2)}
-        assert t._delta_files() == []  # drained, nothing to resurrect
+        assert t._l0.files() == []  # drained, nothing to resurrect
 
     def test_adopts_pre_mor_table(self, spark, tmp_path):
         eager = ParquetMergeTable(
@@ -817,7 +804,7 @@ class TestMorStateConsumers:
         )
         t.merge(make_batch(spark, [ev(2, None, None, OP_DELETE, 5)]))
         t.compact()
-        assert t._delta_files() == []
+        assert t._l0.files() == []
         # drained-L0 raw passthrough: same columns the eager engine writes
         raw = t._read_state()
         assert DELETED_COL not in raw.columns

@@ -1,0 +1,124 @@
+"""Spark-job ledger of the CDC core path.
+
+Static JSON micro-batches run through ``decode_cdc_json`` →
+``CdcBatchApplier.apply_batch`` on both engines: three merge-on-read
+tables (nine batches, so each table crosses one L0 drain at the
+default ``compact_threshold`` of 8) and two eager tables (three
+batches). The number of Spark jobs each batch launches is exact and
+free of timing noise, so it is pinned: a change that adds a job to the
+core path fails here, and one that removes a job updates the pins.
+
+Jobs are counted by the job-id delta around each batch, read after the
+listener bus drains. Job groups are thread-local and would miss the
+jobs the applier's per-table pool threads submit.
+"""
+
+from __future__ import annotations
+
+import json
+import random
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import types as T
+
+from etl_stream_spark.cdc.pipeline import CdcBatchApplier, CdcTableConfig
+from etl_stream_spark.sources.envelope_decode import decode_cdc_json
+
+PAYLOAD = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("v", T.LongType()),
+    ]
+)
+
+#: jobs per batch, as measured on the core path
+#: fused table discovery (an AQE map stage plus the result) and one L0
+#: append per table
+MOR_NON_DRAIN_JOBS = 5
+#: the 8th append of each table also drains its L0 (9 jobs per table)
+MOR_DRAIN_JOBS = 32
+#: two eager tables: the first batch writes into empty targets, later
+#: ones join and rewrite the touched buckets (13 jobs per table)
+EAGER_FIRST_JOBS = 16
+EAGER_JOBS = 26
+
+
+def _last_job(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+def _batches(tables: list[str], n_batches: int, rows_per_table: int, seed: int):
+    """Debezium envelopes per batch, plus the last-writer-wins state they
+    leave behind (``{table: {id: name}}``)."""
+    rng = random.Random(seed)
+    lsn = 0
+    state: dict[str, dict[int, str]] = {t: {} for t in tables}
+    out = []
+    for b in range(n_batches):
+        rows = []
+        for t in tables:
+            live = state[t]
+            for _ in range(rows_per_table):
+                lsn += 1
+                key = rng.randrange(3 * rows_per_table)
+                row = {"id": key, "name": f"{t}-{b}-{lsn}", "v": lsn}
+                if key in live and rng.random() < 0.1:
+                    op, before, after = "d", {"id": key}, None
+                    del live[key]
+                else:
+                    op, before, after = ("u" if key in live else "c"), None, row
+                    live[key] = row["name"]
+                env = {
+                    "op": op,
+                    "ts_ms": 1_700_000_000_000 + lsn,
+                    "before": before,
+                    "after": after,
+                    "source": {"lsn": lsn, "table": t, "schema": "public"},
+                }
+                rows.append(json.dumps(env))
+        out.append(rows)
+    return out, state
+
+
+def _run(spark, root, tables, merge_on_read, n_batches, rows_per_table, seed):
+    app = CdcBatchApplier(
+        spark,
+        str(root / "tables"),
+        {
+            t: CdcTableConfig(keys=["id"], num_buckets=8, merge_on_read=merge_on_read)
+            for t in tables
+        },
+    )
+    batches, want = _batches(tables, n_batches, rows_per_table, seed)
+    # one parquet file per batch, as a file-source trigger delivers it:
+    # one partition, so every L0 append adds one file and the drain lands
+    # on the 8th batch
+    root.mkdir()
+    frames = []
+    for i, rows in enumerate(batches):
+        path = str(root / f"in-{i}.parquet")
+        pq.write_table(pa.table({"value": rows}), path)
+        frames.append(spark.read.schema("value string").parquet(path))
+    # the main thread may carry a job group left by an earlier test
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    jobs = []
+    for epoch, raw in enumerate(frames):
+        j0 = _last_job(spark)
+        app.apply_batch(decode_cdc_json(raw, PAYLOAD), epoch)
+        jobs.append(_last_job(spark) - j0)
+    for t in tables:
+        got = {r["id"]: r["name"] for r in app.target(t).read().collect()}
+        assert got == want[t], t
+    return jobs
+
+
+def test_core_path_job_ledger(spark, tmp_path):
+    mor = _run(spark, tmp_path / "mor", ["t0", "t1", "t2"], True, 9, 67, seed=3)
+    assert mor == [MOR_NON_DRAIN_JOBS] * 7 + [MOR_DRAIN_JOBS, MOR_NON_DRAIN_JOBS], mor
+
+    eager = _run(spark, tmp_path / "eager", ["e0", "e1"], False, 3, 100, seed=5)
+    assert eager == [EAGER_FIRST_JOBS, EAGER_JOBS, EAGER_JOBS], eager

@@ -143,14 +143,14 @@ def test_mor_compaction_crash_window_is_idempotent(spark, tmp_path):
     stash = tmp_path / "stash"
     shutil.copytree(l0_dir, stash)
     t.compact()
-    assert t._delta_files() == []
+    assert t._l0.files() == []
     for f in stash.iterdir():
         shutil.copy(f, l0_dir / f.name)
-    assert t._delta_files() != []
+    assert t._l0.files() != []
 
     # every consumed row exists twice; the read still resolves identically
     assert {r.id: r.v for r in t.read().collect()} == want
     # recovery is simply the next compaction
     t.compact()
-    assert t._delta_files() == []
+    assert t._l0.files() == []
     assert {r.id: r.v for r in t.read().collect()} == want

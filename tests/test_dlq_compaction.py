@@ -53,6 +53,18 @@ def test_dlq_splits_good_and_bad(spark):
     assert decode_cdc_json(raw, PAYLOAD).count() == 2
 
 
+def test_dlq_plans_parse_the_envelope_once(spark):
+    """Both sides of the DLQ split read one bound envelope: the decoded
+    plan parses the full envelope schema once per row (plus the filter's
+    op-only probe), and the dead-letter plan never parses more than op."""
+    raw = spark.createDataFrame([(_envelope("c", 1, 1, "a"),)], "value string")
+    good, bad = decode_cdc_json_with_dlq(raw, PAYLOAD)
+    for df, full_parses in ((good, 1), (bad, 0)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("from_json") == 2, plan
+        assert plan.count("StructField(ts_ms") == full_parses, plan
+
+
 def test_compaction_shrinks_file_count(spark, tmp_path):
     path = str(tmp_path / "landing")
     # simulate many micro-batch appends → many small files

@@ -104,6 +104,41 @@ def test_pipeline_quarantine_gate(spark, tmp_path):
     assert got == {2: ["not_null(v)"], 3: ["in_range(v)"]}
 
 
+def test_quarantine_counter_counts_parked_rows(spark, tmp_path):
+    """cdc_rows_quarantined_total counts parked ROWS: three violating
+    rows add 3, and an all-valid batch adds 0 (its observation reports
+    an empty write instead of leaving ``Observation.get`` waiting)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from etl_stream_spark.cdc import OP_INSERT
+    from etl_stream_spark.cdc.pipeline import CdcBatchApplier, CdcTableConfig
+    from etl_stream_spark.streaming.metrics import MetricsRegistry
+
+    metrics = MetricsRegistry()
+    applier = CdcBatchApplier(
+        spark,
+        str(tmp_path / "silver"),
+        {"t": CdcTableConfig(keys=["id"], num_buckets=4, expectations=[ex.not_null("v")])},
+        metrics=metrics,
+    )
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(i, v, OP_INSERT, f"{seq:020d}", "t") for i, v, seq in rows],
+            "id long, v long, operation string, sequence string, table string",
+        )
+
+    with ThreadPoolExecutor(1) as pool:
+        pool.submit(
+            applier.apply_batch,
+            batch([(1, 5, 1), (2, None, 2), (3, None, 3), (4, None, 4)]),
+        ).result(timeout=120)
+        assert metrics.get("cdc_rows_quarantined_total", {"table": "t"}) == 3
+        pool.submit(applier.apply_batch, batch([(5, 1, 5), (6, 2, 6)])).result(timeout=120)
+        assert metrics.get("cdc_rows_quarantined_total", {"table": "t"}) == 3
+    assert applier.read_quarantine("t").count() == 3
+
+
 def test_quarantine_repair_loop(spark, tmp_path):
     """Park → repair → resubmit: a repaired row passes the gate on
     replay and merges; read_quarantine exposes the parked rows."""

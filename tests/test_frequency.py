@@ -11,7 +11,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from etl_stream_spark.operators.frequency import _mg_update, heavy_hitters
+from etl_stream_spark.operators.frequency import _mg_update, heavy_hitters, mg_hot_candidates
 
 weighted_stream_st = st.lists(
     st.tuples(st.integers(min_value=0, max_value=30), st.integers(1, 50)),
@@ -112,6 +112,20 @@ class TestHeavyHitters:
         df = spark.createDataFrame(rows, "v string")
         assert {r.item for r in heavy_hitters(df, "v", phi=0.1).collect()} == {"edge"}
         assert heavy_hitters(df, "v", phi=0.11).count() == 0
+
+    def test_threshold_compares_phi_exactly(self, spark):
+        # phi = 0.07, n = 100: a float product puts the bar at
+        # ceil(7.000000000000001) = 8, but a key seen exactly 7 times
+        # holds exactly 7% and is heavy (as DECIMAL CEIL in the oracle
+        # has it). 20 distinct keys < capacity, so the MG pass is exact.
+        rows = [("x",)] * 7 + [(f"k{i}",) for i in range(18) for _ in range(5)]
+        rows += [("k18",)] * 3
+        df = spark.createDataFrame(rows, "v string")
+        assert df.count() == 100
+        assert {(r.item, r.cnt) for r in heavy_hitters(df, "v", phi=0.07).collect()} == {
+            ("x", 7)
+        }
+        assert {r.item for r in mg_hot_candidates(df, "v", phi=0.07).collect()} == {"x"}
 
     def test_nulls_ignored_and_share(self, spark):
         df = spark.createDataFrame(

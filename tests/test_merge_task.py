@@ -383,11 +383,11 @@ class TestEpochReplayGuard:
         applier = self._applier(spark, tmp_path, mor=True)
         b = _events(spark, [(1, "a", "INSERT", "01")]).withColumn("table", F.lit("t1"))
         applier.apply_batch(b, epoch_id=5)
-        n_files = len(applier.target("t1")._delta_files())
+        n_files = len(applier.target("t1")._l0.files())
         applier.apply_batch(b, epoch_id=5)  # replay
-        assert len(applier.target("t1")._delta_files()) == n_files
+        assert len(applier.target("t1")._l0.files()) == n_files
         applier.apply_batch(b, epoch_id=4)  # older epoch replays too
-        assert len(applier.target("t1")._delta_files()) == n_files
+        assert len(applier.target("t1")._l0.files()) == n_files
 
     def test_epochless_callers_are_unguarded(self, spark, tmp_path):
         """Repair/resubmission paths pass no epoch — they must always

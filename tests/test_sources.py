@@ -132,32 +132,38 @@ class TestEnvelopeDecode:
         assert got == want
 
     def test_decode_falls_back_for_sql_unsafe_field_names(self, spark):
-        """A payload field name the SQL-literal plan cannot embed
-        (quote/backtick) must still decode — via the Column-object
-        fallback — with identical envelope semantics."""
+        """Names and metadata that SQL text must escape — a quote, a
+        backtick and a backslash in field names, a quote and a backslash in
+        a field's metadata, a backtick in ``value_col`` — decode through the one
+        SQL-string plan (its expression cache holds the schema) with the
+        usual envelope semantics."""
         import json as _json
 
         from pyspark.sql import types as T
 
+        from etl_stream_spark.sources.envelope_decode import _DECODE_EXPR_CACHE
+
         ps = T.StructType(
             [
-                T.StructField("id", T.LongType()),
+                T.StructField("id", T.LongType(), metadata={"note": "it's a \\ key"}),
                 T.StructField("weird'na`me", T.StringType()),
+                T.StructField("back\\slash", T.StringType()),
             ]
         )
         env = _json.dumps(
             {
                 "op": "c",
                 "ts_ms": 1000,
-                "after": {"id": 5, "weird'na`me": "x"},
+                "after": {"id": 5, "weird'na`me": "x", "back\\slash": "y"},
                 "source": {"lsn": 9, "table": "t", "schema": "s"},
             }
         )
-        raw = spark.createDataFrame([(env,)], "value string")
-        out = decode_cdc_json(raw, ps).collect()
+        raw = spark.createDataFrame([(env,)], "`kafka``value` string")
+        out = decode_cdc_json(raw, ps, "kafka`value").collect()
+        assert (ps.json(), "kafka`value") in _DECODE_EXPR_CACHE
         assert len(out) == 1
         r = out[0]
-        assert r["id"] == 5 and r["weird'na`me"] == "x"
+        assert r["id"] == 5 and r["weird'na`me"] == "x" and r["back\\slash"] == "y"
         assert r["operation"] == "INSERT"
         assert r["sequence"].startswith("0000000000000009/")
 
