@@ -12,7 +12,6 @@ from etl_stream_spark.cdc.envelope import (
     make_sequence,
     with_cdc_metadata,
 )
-from etl_stream_spark.cdc.delta_merge import DeltaMergeTable
 from etl_stream_spark.cdc.merge import ParquetMergeTable
 from etl_stream_spark.cdc.rollup import IncrementalRollup
 from etl_stream_spark.cdc.pipeline import (
@@ -30,7 +29,6 @@ __all__ = [
     "OP_UPDATE",
     "CdcBatchApplier",
     "CdcTableConfig",
-    "DeltaMergeTable",
     "IncrementalRollup",
     "LandingTable",
     "MergeTask",

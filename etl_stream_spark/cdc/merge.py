@@ -14,9 +14,7 @@ applied ``sequence`` per key, and a matched source row only wins when its
 sequence is *newer* — stale (out-of-order, cross-batch replayed) events
 lose, including stale deletes.
 
-Storage & scale design (Delta/Iceberg jars are absent in this image; on a
-real deployment this class swaps for ``DeltaTable.merge`` — the public
-API is identical):
+Storage & scale design:
 
 * the target is hash-bucketed on the PK into ``_bucket=NN`` parquet
   partitions (``pmod(xxhash64(pk), num_buckets)``);
@@ -580,19 +578,20 @@ class ParquetMergeTable:
 
         def pick(col: str) -> F.Column:
             # a column absent from the batch SCHEMA keeps the target's
-            # value on matched update — Delta's whenMatchedUpdate(set=…)
-            # can only assign listed columns, so the parquet engine must
-            # match or the documented drop-in swap would change results.
-            # (A NULL *value* in a present column still overwrites.)
+            # value on matched update: the producer said nothing about
+            # that column (an older producer, or a table whose schema
+            # grew after the event was written), so overwriting it
+            # with NULL would erase data no event deleted. (A NULL
+            # *value* in a present column is a statement and still
+            # overwrites.)
             #
             # A WINNING DELETE also takes the batch side — and when the
             # column is ABSENT from a PK-only delete's schema, a typed
-            # NULL, never the keeps-target fallback: the Delta twin's
-            # tombstone_assignments sets every data column from b, and
-            # retention demands the pre-image not linger on the
-            # tombstone until compaction — Kafka-tombstone semantics.
-            # (Only reachable in tombstone mode; winning deletes are
-            # filtered out otherwise.)
+            # NULL, never the keeps-target fallback: a tombstone marks
+            # the row deleted, and retention demands the pre-image not
+            # linger on it until compaction — Kafka-tombstone
+            # semantics. (Only reachable in tombstone mode; winning
+            # deletes are filtered out otherwise.)
             return (
                 F.when(src_wins, _b_stored(col))
                 .otherwise(_t_stored(col))
@@ -711,9 +710,7 @@ class ParquetMergeTable:
         they carry no newer source sequence). Recovery is re-running the
         same batch: sequences are monotone, so re-applying is
         idempotent for every bucket that did swap, and repairs the ones
-        that did not. A deployment needing table-atomic commits swaps
-        this class for Delta/Iceberg MERGE (same public API — see
-        module docstring); the bucket layout and pruning carry over.
+        that did not.
         """
         df = df.persist()
         try:

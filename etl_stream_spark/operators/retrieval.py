@@ -236,18 +236,7 @@ class PostingsIndex:
         from etl_stream_spark.l0_log import read_small_text
 
         text = read_small_text(self.spark, self._meta_path)
-        if text is not None:
-            return int(text)
-        # legacy layout (pre round-4): one-row parquet dataset. Reading
-        # 0 for a populated index would silently corrupt the next
-        # upsert (stale-sequence veto) — fall back, then migrate on the
-        # next _set_gen.
-        try:
-            return int(
-                self.spark.read.parquet(self.path + "/meta.parquet").first()["gen"]
-            )
-        except Exception:
-            return 0
+        return 0 if text is None else int(text)
 
     def _set_gen(self, g: int) -> None:
         from etl_stream_spark.l0_log import write_small_text

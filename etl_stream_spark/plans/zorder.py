@@ -31,6 +31,9 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: Catalyst's ``sizeInBytes`` for a plan it cannot size (Long.MaxValue).
+_UNSIZED_ESTIMATE = (1 << 63) - 1
+
 #: Column dtypes :func:`with_zvalue_n` accepts directly (cast to long).
 _INTEGRAL_DTYPES = ("tinyint", "smallint", "int", "bigint")
 
@@ -169,7 +172,9 @@ def write_zordered(
     rewrites land near the target without any extra Spark job. It is an
     estimate (projection/compression shift real sizes by a small
     factor), a file-sizing knob, never a correctness one; an explicit
-    ``num_files`` is ignored when the target is given."""
+    ``num_files`` is ignored when the target is given. An input Catalyst
+    cannot size (e.g. a frame over an RDD) raises ``ValueError``: pass
+    ``num_files`` for it."""
     if len(cols) < 2:
         raise ValueError("write_zordered needs at least two clustering columns")
     if bits is None:
@@ -178,12 +183,18 @@ def write_zordered(
         if target_file_bytes <= 0:
             raise ValueError("target_file_bytes must be positive")
         # py4j hands back scala.math.BigInt — round-trip through str.
-        # Clamp the derived count: an unsized plan estimates
-        # Long.MaxValue and a 2^63-way range partition is a driver DoS,
-        # not a layout.
         est = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
+        if est == _UNSIZED_ESTIMATE:
+            # an RDD-backed or otherwise unsized plan: any count derived
+            # from the sentinel is the clamp, not a layout
+            raise ValueError(
+                "write_zordered: Catalyst has no size estimate for this "
+                "input, so target_file_bytes cannot size the layout; "
+                "pass num_files instead"
+            )
+        # clamp a join-inflated estimate: the count is a sizing knob
         num_files = max(1, min(-(-est // int(target_file_bytes)), 1 << 20))
     # sever_bounds: the range-sample pass and the write pass below each
     # consume z — without the sever both re-run the full-input bounds

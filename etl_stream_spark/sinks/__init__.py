@@ -1,12 +1,9 @@
-"""Sink layer (SURVEY.md §2.2): streaming landing append (K1/K3),
-checkpointed merge sink (K2 analog), HTTP/webhook delivery (K4/K5)."""
+"""Sink layer (SURVEY.md §2.2): streaming landing append (K1/K3) and
+the checkpointed merge sink (K2 analog)."""
 
 from etl_stream_spark.sinks.append import start_landing_stream, start_merge_stream
-from etl_stream_spark.sinks.webhook import WebhookSink, post_json
 
 __all__ = [
     "start_landing_stream",
     "start_merge_stream",
-    "WebhookSink",
-    "post_json",
 ]

@@ -229,17 +229,6 @@ class TestTombstones:
         )
         assert state_dict(plain) == {}
 
-    def test_delta_tombstone_clauses(self):
-        from etl_stream_spark.cdc import delta_merge as dm
-
-        assign = dm.tombstone_assignments(["id", "v"])
-        assert assign == {
-            "id": "b.id",
-            "v": "b.v",
-            "_seq": "b.sequence",
-            "_deleted": "b.operation = 'DELETE'",
-        }
-
 
 class TestTruncateBarrier:
     def test_s6_truncate_interleaved(self, spark, target):
@@ -302,135 +291,6 @@ class TestLanding:
         assert wm == make_sequence(1_700_000_000_000_000, 2)
         landing.purge_upto(make_sequence(1_700_000_000_000_000, 1))
         assert landing.read().count() == 1
-
-
-class TestDeltaMergeTwin:
-    """The Delta production form of the merge engine: clause construction
-    is verified jar-free; the runtime path gates with a documented hint;
-    the public API mirrors ParquetMergeTable exactly."""
-
-    def test_clause_construction(self):
-        from etl_stream_spark.cdc import delta_merge as dm
-
-        assert dm.merge_condition(["id", "ts"]) == "t.id <=> b.id AND t.ts <=> b.ts"
-        # legacy strictly-newer forms (no data_cols)
-        assert dm.delete_condition() == "b.operation = 'DELETE' AND b.sequence > t._seq"
-        assert dm.update_condition() == "b.operation <> 'DELETE' AND b.sequence > t._seq"
-        assert dm.insert_condition() == "b.operation <> 'DELETE'"
-        assign = dm.column_assignments(["id", "v"])
-        assert assign == {"id": "b.id", "v": "b.v", "_seq": "b.sequence"}
-
-    def test_equal_sequence_tie_clause_matches_parquet_engine(self, spark):
-        """The generated MERGE condition must carry the SAME equal-
-        sequence tie-break as the parquet engine: newer sequence wins
-        outright; an equal sequence falls to the stored-shape md5
-        comparison. The SQL md5 must be byte-identical to the
-        DataFrame-side stored_shape_tie_break for the same row."""
-        from pyspark.sql import functions as F
-
-        from etl_stream_spark.cdc import delta_merge as dm
-        from etl_stream_spark.cdc.merge import stored_shape_tie_break
-
-        cond = dm.newer_sequence_condition(["v", "id"])
-        assert cond.startswith("(b.sequence > t._seq OR (b.sequence = t._seq AND ")
-        # sorted column order: id before v on both sides
-        assert cond.index("b.id") < cond.index("b.v")
-        tomb = dm.newer_sequence_condition(["id"], tombstone=True)
-        assert "t._deleted" in tomb
-        assert "t._deleted" not in cond  # non-tombstone hashes false
-
-        # byte-parity: evaluate the SQL hash and the DataFrame hash on
-        # the same row
-        row = spark.createDataFrame([(3, "x", "0005_00000001")], "id long, v string, s string")
-        sql_tie = dm._stored_tie_sql(["b.id", "b.v"], "b.s", "false")
-        got_sql = row.alias("b").selectExpr(f"{sql_tie} AS h").first()["h"]
-        got_df = row.select(
-            stored_shape_tie_break(
-                [F.col("id"), F.col("v")], F.col("s"), F.lit(False)
-            ).alias("h")
-        ).first()["h"]
-        assert got_sql == got_df
-
-    def test_tie_hashes_union_of_target_and_batch_schemas(self, spark):
-        """Given the live target's columns, the tie condition must hash
-        the UNION of schemas with the parquet engine's stored-value
-        fill: a batch-absent column keeps the target's value on update
-        and scrubs to NULL on a winning delete; a target-absent column
-        hashes NULL on the target side. The hash for a narrower batch's
-        update must therefore equal the eager engine's tie over the
-        stored outcome — verified by evaluating both on one joined row."""
-        from pyspark.sql import functions as F
-
-        from etl_stream_spark.cdc import delta_merge as dm
-        from etl_stream_spark.cdc.merge import stored_shape_tie_break
-
-        # batch carries only (id, v); target also stores w
-        cond = dm.newer_sequence_condition(["id", "v"], target_cols=["id", "v", "w"])
-        # the batch side must reference t.w via the keeps-target CASE
-        assert "CASE WHEN b.operation = 'DELETE' THEN null ELSE t.w END" in cond
-        # a batch-only column hashes NULL on the target side
-        cond_wide = dm.newer_sequence_condition(["id", "v", "x"], target_cols=["id", "v"])
-        assert "t.x" not in cond_wide
-
-        joined = spark.createDataFrame(
-            [(3, "new", "UPDATE", "0005", "kept", 7, "0005")],
-            "id long, v string, operation string, sequence string, "
-            "w string, t_id long, t_seq string",
-        )
-        b_tie_sql = dm._stored_tie_sql(
-            ["b.id", "b.v", "(CASE WHEN b.operation = 'DELETE' THEN null ELSE t.w END)"],
-            "b.sequence",
-            "b.operation = 'DELETE'",
-        )
-        got_sql = (
-            joined.alias("b")
-            .selectExpr(f"{b_tie_sql.replace('t.w', 'w')} AS h")
-            .first()["h"]
-        )
-        # eager engine: hash the row AS IT WOULD BE STORED if b wins —
-        # id/v from batch, w kept from target
-        got_df = joined.select(
-            stored_shape_tie_break(
-                [F.col("id"), F.col("v"), F.col("w")],
-                F.col("sequence"),
-                F.col("operation") == "DELETE",
-            ).alias("h")
-        ).first()["h"]
-        assert got_sql == got_df
-
-    def test_tombstone_assignments_scrub_target_only_columns(self):
-        from etl_stream_spark.cdc import delta_merge as dm
-
-        out = dm.tombstone_assignments(["id", "v"], target_cols=["id", "v", "w"])
-        assert out["w"] == "CASE WHEN b.operation = 'DELETE' THEN null ELSE t.w END"
-        assert out["v"] == "b.v" and out["_deleted"] == "b.operation = 'DELETE'"
-        # without target_cols: batch columns only (legacy form)
-        assert "w" not in dm.tombstone_assignments(["id", "v"])
-
-    def test_api_parity_with_parquet_engine(self):
-        from etl_stream_spark.cdc.delta_merge import DeltaMergeTable
-        from etl_stream_spark.cdc.merge import ParquetMergeTable
-        import inspect
-
-        for name in ("exists", "read", "truncate", "merge"):
-            p = inspect.signature(getattr(ParquetMergeTable, name))
-            d = inspect.signature(getattr(DeltaMergeTable, name))
-            assert p == d, name
-        assert inspect.signature(ParquetMergeTable.__init__) == inspect.signature(
-            DeltaMergeTable.__init__
-        )
-
-    def test_gated_without_jar(self, spark, tmp_path):
-        from etl_stream_spark.cdc.delta_merge import DeltaMergeTable
-
-        try:
-            import delta  # noqa: F401
-        except ImportError:
-            with pytest.raises(RuntimeError, match="--packages"):
-                DeltaMergeTable(spark, str(tmp_path / "d"), keys=["id"])
-        else:
-            t = DeltaMergeTable(spark, str(tmp_path / "d"), keys=["id"])
-            assert not t.exists()
 
 
 class TestTombstonePermutationInvariance:
@@ -511,7 +371,7 @@ class TestPrunedStateRead:
 
 class TestTombstonePayload:
     def test_winning_delete_drops_pre_image(self, spark, tmp_path):
-        """Kafka-tombstone semantics (and Delta-twin parity): a winning
+        """Kafka-tombstone semantics: a winning
         DELETE takes the batch row's data values — NULL for PK-only
         deletes — so the pre-image does not linger in storage until
         compaction (retention/RTBF window)."""

@@ -4,12 +4,20 @@ the oracle can't express: determinism, leakage-freedom, subset-ness)."""
 
 from __future__ import annotations
 
+import random
+
 import pyspark.sql.functions as F
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from etl_stream_spark.operators import corpus as cp
 from etl_stream_spark.session import load_table
 
 SF = "/root/testdata/sf0.001"
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
 
 
 def test_hash_bucket_range_and_determinism(spark):
@@ -300,3 +308,141 @@ class TestRemoveBoilerplate:
         }
         assert out[1].clean_text == "x"
         assert out[4].clean_text == "pad bar nav w"  # untouched
+
+
+class TestSourceConcentrationProperties:
+    def _brute_gini_ppm(self, weights):
+        xs = sorted(weights)
+        n, s = len(xs), sum(xs)
+        iw = sum(i * x for i, x in enumerate(xs, 1))
+        num = 2 * iw - (n + 1) * s
+        den = n * s
+        return (2 * num * 1_000_000 + den) // (2 * den)
+
+    def test_equal_weights_give_zero_gini(self, spark):
+        from etl_stream_spark.operators.corpus import source_concentration
+
+        rows = [(f"s{i}", 100) for i in range(6) for _ in range(3)]
+        df = spark.createDataFrame(rows, "source string, n_chars long")
+        out = source_concentration(df).collect()
+        assert all(r.gini_ppm == 0 for r in out)
+        assert out == sorted(out, key=lambda r: (r.total_weight, r.source))
+
+    def test_matches_bruteforce_and_lorenz_identities(self, spark):
+        from etl_stream_spark.operators.corpus import source_concentration
+
+        rng = random.Random(9)
+        per_source = {f"s{i}": rng.randint(1, 500) for i in range(8)}
+        rows = [(s, w) for s, w in per_source.items()]
+        df = spark.createDataFrame(rows, "source string, n_chars long")
+        out = source_concentration(df).orderBy("cum_weight").collect()
+        assert [r.gini_ppm for r in out] == [
+            self._brute_gini_ppm(list(per_source.values()))
+        ] * len(out)
+        # Lorenz curve: cumulative weights are monotone and end at the
+        # total; the final cumulative share is exactly 1e6 ppm
+        assert out[-1].cum_weight == sum(per_source.values())
+        assert out[-1].cum_share_ppm == 1_000_000
+        cums = [r.cum_weight for r in out]
+        assert cums == sorted(cums)
+
+    def test_partitioning_invariance(self, spark):
+        from etl_stream_spark.operators.corpus import source_concentration
+
+        rng = random.Random(21)
+        rows = [
+            (f"s{rng.randint(0, 5)}", rng.randint(10, 2000)) for _ in range(300)
+        ]
+        df = spark.createDataFrame(rows, "source string, n_chars long")
+        assert _rows(source_concentration(df)) == _rows(
+            source_concentration(df.repartition(19))
+        )
+
+
+weights_st = st.dictionaries(
+    st.text(alphabet="abcdefgh", min_size=1, max_size=4),
+    st.integers(min_value=1, max_value=10**6),
+    min_size=1,
+    max_size=15,
+)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(per_source=weights_st)
+def test_gini_matches_bruteforce_on_random_weights(spark, per_source):
+    """For ANY per-source weights: the exact integer-space Gini and a
+    Lorenz curve that is monotone and terminates at exactly 1e6 ppm."""
+    from etl_stream_spark.operators.corpus import source_concentration
+
+    df = spark.createDataFrame(
+        [(s, w) for s, w in per_source.items()], "source string, n_chars long"
+    )
+    out = sorted(source_concentration(df).collect(), key=lambda r: (r.cum_weight))
+    xs = sorted(per_source.values())
+    n, s_tot = len(xs), sum(xs)
+    iw = sum(i * x for i, x in enumerate(xs, 1))
+    num, den = 2 * iw - (n + 1) * s_tot, n * s_tot
+    want_gini = (2 * num * 1_000_000 + den) // (2 * den)
+    assert all(r.gini_ppm == want_gini for r in out)
+    assert out[-1].cum_share_ppm == 1_000_000
+    shares = [r.cum_share_ppm for r in out]
+    assert shares == sorted(shares)
+
+
+class TestLateAnalyticsEntryInvariants:
+    """Cross-column invariants of the late-round catalog entries over
+    the real sf0.001 tables (the oracle gate proves value parity; these
+    pin the semantic identities a refactor could silently break)."""
+
+    SF = "/root/testdata/sf0.001"
+
+    def test_oov_rate_bounds_and_totals(self, spark):
+        from etl_stream_spark.catalog import corpus_oov_rate, corpus_vocabulary
+
+        rows = corpus_oov_rate(spark, self.SF).collect()
+        assert rows, "at least one source"
+        total_tokens = sum(r.n_tokens for r in rows)
+        vocab_total = (
+            corpus_vocabulary(spark, self.SF)
+            .agg(F.sum("term_freq").alias("s"))
+            .collect()[0]
+            .s
+        )
+        # every exploded token lands in exactly one source bucket
+        assert total_tokens == vocab_total
+        for r in rows:
+            assert 0 <= r.n_oov <= r.n_tokens
+            assert 0 <= r.oov_ppm <= 1_000_000
+            assert r.oov_ppm == (2 * r.n_oov * 1_000_000 + r.n_tokens) // (
+                2 * r.n_tokens
+            )
+
+    def test_calibration_bins_partition_the_corpus(self, spark):
+        from etl_stream_spark.catalog import corpus_quality_calibration
+
+        rows = corpus_quality_calibration(spark, self.SF).collect()
+        assert sorted(r.bin for r in rows) == list(range(10))
+        n_docs = (
+            spark.read.parquet(f"{self.SF}/documents.parquet").count()
+        )
+        assert sum(r.n_docs for r in rows) == n_docs
+        for r in rows:
+            assert r.n_heuristic_keep <= r.n_docs
+            if r.n_docs == 0:
+                assert r.keep_ppm is None and r.min_score is None
+            else:
+                # scores in a decile bin sit inside its half-open range
+                # (bin 9 also holds score == 1.0)
+                assert r.min_score >= r.bin / 10 - 1e-9
+                assert r.max_score <= (r.bin + 1) / 10 + 1e-9
+
+    def test_conversion_latency_percentiles_monotone(self, spark):
+        from etl_stream_spark.catalog import events_conversion_latency
+
+        r = events_conversion_latency(spark, self.SF).collect()[0]
+        assert r.n_converted > 0
+        assert 0 <= r.p25_s <= r.p50_s <= r.p75_s <= r.p90_s

@@ -1,26 +1,14 @@
-"""Kafka reader wiring + JDBC Postgres introspection — the two
-production source paths that have no broker/database in this sandbox.
-The option-building, decode, and catalog-row→StructType pipelines are
-exercised for real; only the network edge is mocked/absent."""
+"""Kafka reader wiring — the production source path that has no broker
+in this sandbox. The option-building and decode pipelines are exercised
+for real; only the network edge is absent."""
 
 from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_stream_spark.schema.identifiers import InvalidIdentifierError
-from etl_stream_spark.schema.pg_introspection import (
-    PG_COLUMNS_QUERY,
-    PG_PUBLICATION_TABLES_QUERY,
-    PG_WAL_SIZE_QUERY,
-    introspect_pg_columns,
-    pg_table_schema,
-    publication_tables,
-    wal_retained_bytes,
-)
 from etl_stream_spark.sources.kafka_source import (
     kafka_cdc_stream,
     kafka_reader_options,
@@ -87,76 +75,3 @@ def test_kafka_value_decode_matches_file_path(spark):
     assert (row["id"], row["v"], row["operation"], row["table"]) == (
         7, 1.5, "UPDATE", "orders",
     )
-
-
-# ----------------------------------------------------------------- jdbc
-
-PG_FIXTURE_ROWS = [
-    # (column_name, type_oid, type_name, typmod, nullable, is_primary)
-    ("o_orderkey", 20, "int8", -1, False, True),
-    ("o_custkey", 23, "int4", -1, False, False),
-    ("o_totalprice", 1700, "numeric", ((12 << 16) | 2) + 4, True, False),
-    ("o_comment", 1043, "varchar", 104, True, False),
-]
-
-
-def _mock_reader(spark):
-    """Reader returning catalog fixture rows for whichever catalog query
-    arrives — the integration seam a real deployment replaces with
-    ``jdbc_query_reader``."""
-
-    def read(query: str):
-        if "pg_attribute" in query:
-            return spark.createDataFrame(
-                PG_FIXTURE_ROWS,
-                "column_name string, type_oid long, type_name string, "
-                "typmod long, nullable boolean, is_primary boolean",
-            )
-        if "pg_publication_tables" in query:
-            return spark.createDataFrame(
-                [("public", "orders"), ("public", "lineitem")],
-                "table_schema string, table_name string",
-            )
-        if "pg_replication_slots" in query:
-            return spark.createDataFrame(
-                [("etl_slot", 123456789)], "slot_name string, retained_bytes long"
-            )
-        raise AssertionError(f"unexpected query: {query}")
-
-    return read
-
-
-def test_pg_columns_to_struct_type(spark):
-    reader = _mock_reader(spark)
-    cols = introspect_pg_columns("public", "orders", reader)
-    assert [c.name for c in cols] == [r[0] for r in PG_FIXTURE_ROWS]
-    assert [c.primary for c in cols] == [True, False, False, False]
-    st = pg_table_schema("public", "orders", reader)
-    assert st["o_orderkey"].dataType == T.LongType()
-    assert st["o_orderkey"].nullable is False
-    assert st["o_custkey"].dataType == T.IntegerType()
-    assert st["o_totalprice"].dataType == T.DecimalType(12, 2)
-    assert st["o_comment"].dataType == T.StringType()
-
-
-def test_pg_identifier_validation_blocks_injection(spark):
-    reader = _mock_reader(spark)
-    with pytest.raises(InvalidIdentifierError):
-        introspect_pg_columns("public", "orders; DROP TABLE x", reader)
-
-
-def test_publication_and_wal_scans(spark):
-    reader = _mock_reader(spark)
-    assert publication_tables("etl_pub", reader) == [
-        ("public", "orders"),
-        ("public", "lineitem"),
-    ]
-    assert wal_retained_bytes(reader) == {"etl_slot": 123456789}
-
-
-def test_catalog_queries_are_wellformed():
-    q = PG_COLUMNS_QUERY.format(schema="public", table="orders")
-    assert "pg_attribute" in q and "indisprimary" in q and "ORDER BY a.attnum" in q
-    assert "{" not in q  # fully interpolated
-    assert "{" not in PG_PUBLICATION_TABLES_QUERY.format(publication="p")
-    assert "pg_replication_slots" in PG_WAL_SIZE_QUERY

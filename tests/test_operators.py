@@ -10,6 +10,12 @@ from etl_stream_spark.operators import dedup as dd
 from etl_stream_spark.operators import multimodal as mm
 from etl_stream_spark.operators import similarity as sim
 from etl_stream_spark.operators import text_analysis as ta
+from tests.conftest import SF_SMOKE
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
 
 DOCS = [
     (1, "The quick brown fox jumps over the lazy dog", "a"),
@@ -975,3 +981,84 @@ class TestLshPlan:
         with _pytest.raises(ValueError):
             # recall 0.999 at 0.1 Jaccard is unreachable with 4 hashes
             lsh_plan(0.1, 0.999, max_hashes=4)
+
+
+class TestTokenizeOnceEquivalence:
+    @pytest.fixture(scope="class")
+    def docs(self, spark):
+        from etl_stream_spark.session import load_table
+
+        return load_table(spark, SF_SMOKE, "documents")
+
+    def test_language_scores_equal_per_marker_sums(self, spark, docs):
+        """One isin filter per language ≡ the sum of per-marker counts
+        (markers are distinct strings, so a token matches at most one) —
+        the algebraic fact the 25→5-scan rewrite rests on."""
+        from etl_stream_spark.operators import text_analysis as ta
+
+        langs = sorted(ta.LANG_MARKERS)
+        lid = ta.with_language_id(docs).select(
+            "doc_id", *[f"score_{l}" for l in langs]
+        )
+        brute = docs.withColumn("_t", ta.tokens("text"))
+        for lang in langs:
+            score = None
+            for w in ta.LANG_MARKERS[lang]:
+                c = ta._count_token(F.col("_t"), w)
+                score = c if score is None else score + c
+            brute = brute.withColumn(f"b_{lang}", score.cast("long"))
+        joined = lid.join(brute.select("doc_id", *[f"b_{l}" for l in langs]), "doc_id")
+        mismatched = joined.filter(
+            " or ".join(f"score_{l} <> b_{l}" for l in langs)
+        ).count()
+        assert mismatched == 0
+
+    def test_toks_col_reuse_paths_identical(self, spark, docs):
+        """Each helper's toks_col fast path must return exactly the
+        default path's frame (the funnel rides all three at once)."""
+        from etl_stream_spark.operators import text_analysis as ta
+
+        bound = docs.withColumn("_toks", ta.tokens("text"))
+
+        q_cols = ["doc_id", "n_tokens", "stopword_ratio", "punct_ratio", "quality_keep"]
+        assert _rows(ta.with_quality_score(docs).select(*q_cols)) == _rows(
+            ta.with_quality_score(bound, toks_col="_toks").select(*q_cols)
+        )
+
+        l_cols = ["doc_id", "predicted_lang"] + [
+            f"score_{l}" for l in sorted(ta.LANG_MARKERS)
+        ]
+        assert _rows(ta.with_language_id(docs).select(*l_cols)) == _rows(
+            ta.with_language_id(bound, toks_col="_toks").select(*l_cols)
+        )
+
+        r_cols = [
+            "doc_id",
+            "n_tokens",
+            "top_bigram_frac",
+            "top_trigram_frac",
+            "max_token_run",
+            "repetition_keep",
+        ]
+        assert _rows(ta.with_repetition_stats(docs).select(*r_cols)) == _rows(
+            ta.with_repetition_stats(bound, toks_col="_toks").select(*r_cols)
+        )
+
+    def test_toks_col_survives_the_helper_chain(self, spark, docs):
+        """The funnel chains all three helpers on one bound column; no
+        helper may drop or clobber a caller-owned toks_col."""
+        from etl_stream_spark.operators import text_analysis as ta
+
+        chained = ta.with_repetition_stats(
+            ta.with_quality_score(
+                ta.with_language_id(
+                    docs.withColumn("_toks", ta.tokens("text")), toks_col="_toks"
+                ),
+                toks_col="_toks",
+            ).drop("n_tokens"),
+            toks_col="_toks",
+        )
+        assert "_toks" in chained.columns
+        # and the chain's flags equal the independently computed ones
+        solo = ta.with_repetition_stats(docs).select("doc_id", "repetition_keep")
+        assert _rows(chained.select("doc_id", "repetition_keep")) == _rows(solo)

@@ -4,6 +4,9 @@ these assert structural properties cheaply at sf0.001)."""
 
 from __future__ import annotations
 
+import random
+from fractions import Fraction
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -95,3 +98,68 @@ def test_q17_filter_is_strict_subset(spark):
 def test_shapes_execute_nonempty(spark, name):
     fn = dict((n, f) for n, f, _ in rx.EXTRA_QUERIES)[name]
     assert fn(spark, SF).count() > 0
+
+
+# -- exact-arithmetic rules of part_xyz_classes and supplier_lead_time:
+# the integer forms must equal their rational definitions on any input
+
+
+def _xyz_int(series: list[int]) -> str:
+    """The catalog's integer rule: with s = Σq, s2 = Σq², n = len,
+    X ⟺ 4·(n·s2 − s²) < s², Y ⟺ n·s2 − s² < s², else Z."""
+    n, s, s2 = len(series), sum(series), sum(q * q for q in series)
+    spread = n * s2 - s * s
+    if 4 * spread < s * s:
+        return "X"
+    if spread < s * s:
+        return "Y"
+    return "Z"
+
+
+def _xyz_exact(series: list[int]) -> str:
+    """Exact rational cv² = (n·Σq² − s²)/s² vs 1/4 and 1."""
+    n, s, s2 = len(series), sum(series), sum(q * q for q in series)
+    cv2 = Fraction(n * s2 - s * s, s * s)
+    if cv2 < Fraction(1, 4):
+        return "X"
+    if cv2 < 1:
+        return "Y"
+    return "Z"
+
+
+def test_xyz_integer_rule_equals_exact_rational_cv():
+    rng = random.Random(7)
+    for _ in range(3000):
+        n = rng.randint(1, 12)
+        series = [rng.randint(1, 60) for _ in range(n)]
+        assert _xyz_int(series) == _xyz_exact(series), series
+
+
+def test_xyz_boundary_cases():
+    assert _xyz_int([5, 5, 5, 5]) == "X"  # constant → cv = 0
+    assert _xyz_int([4, 2]) == "X"  # cv = 1/3
+    # cv exactly 0.5 (2|a−b| = a+b): the boundary must fall to Y on
+    # both engines — the strict < is what the integer form pins
+    assert _xyz_int([3, 1]) == "Y" and _xyz_exact([3, 1]) == "Y"
+    assert _xyz_int([5, 1]) == "Y"  # cv = 2/3
+    assert _xyz_int([9, 1, 1, 1]) == "Z"  # cv ≥ 1
+    assert _xyz_int([7]) == "X"  # single week → zero variance
+
+
+def _mean_2dp_int(s: int, n: int) -> float:
+    """The catalog's sign-aware half-up integer rounding of s/n to 2dp."""
+    q = (2 * abs(s) * 100 + n) // (2 * n)
+    return (-q if s < 0 else q) / 100.0
+
+
+def test_lead_time_mean_rounding_equals_exact_half_up():
+    rng = random.Random(11)
+    for _ in range(3000):
+        n = rng.randint(1, 500)
+        s = rng.randint(-(10**7), 10**7)
+        # exact half-up on the rational s·100/n
+        scaled = Fraction(abs(s) * 100, n)
+        q, r = divmod(scaled.numerator, scaled.denominator)
+        want = q + (1 if 2 * r >= scaled.denominator else 0)
+        want = (-want if s < 0 else want) / 100.0
+        assert _mean_2dp_int(s, n) == want, (s, n)

@@ -1,18 +1,9 @@
-"""Validation (P10), TTL+LRU schema cache, catalog introspection (S4/S5/S7)."""
+"""Validation (P10): decimal bounds and per-column value rules."""
 
 from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import types as T
-
-from etl_stream_spark.schema.cache import TtlLruCache
-from etl_stream_spark.schema.introspection import (
-    describe_columns,
-    list_tables,
-    path_schema,
-    table_exists,
-)
 from etl_stream_spark.schema.validation import (
     ValidationReport,
     decimal_fits,
@@ -44,159 +35,3 @@ class TestValidation:
     def test_validate_frame_no_applicable_columns(self, spark):
         df = spark.createDataFrame([(1, "a")], "id long, s string")
         assert validate_frame(df) == []
-
-
-class TestTtlLruCache:
-    def test_ttl_expiry(self):
-        now = {"t": 0.0}
-        c: TtlLruCache[str] = TtlLruCache(ttl_s=300, clock=lambda: now["t"])
-        c.put("k", "v")
-        assert c.get("k") == "v"
-        now["t"] = 301.0
-        assert c.get("k") is None
-
-    def test_lru_eviction(self):
-        c: TtlLruCache[int] = TtlLruCache(max_entries=2, clock=lambda: 0.0)
-        c.put("a", 1)
-        c.put("b", 2)
-        c.get("a")  # touch a → b becomes LRU
-        c.put("c", 3)
-        assert c.get("b") is None
-        assert c.get("a") == 1 and c.get("c") == 3
-
-    def test_get_or_load_loads_once(self):
-        calls = []
-        c: TtlLruCache[str] = TtlLruCache(clock=lambda: 0.0)
-        for _ in range(3):
-            c.get_or_load("k", lambda: calls.append(1) or "v")
-        assert len(calls) == 1
-
-    def test_cleanup_expired(self):
-        now = {"t": 0.0}
-        c: TtlLruCache[int] = TtlLruCache(ttl_s=10, clock=lambda: now["t"])
-        c.put("a", 1)
-        now["t"] = 5.0
-        c.put("b", 2)
-        now["t"] = 12.0
-        assert c.cleanup_expired() == 1
-        assert len(c) == 1 and c.get("b") == 2
-
-
-class TestIntrospection:
-    def test_table_exists_and_list(self, spark):
-        spark.createDataFrame([(1,)], "id long").createOrReplaceTempView("intros_t")
-        assert table_exists(spark, "intros_t")
-        assert not table_exists(spark, "intros_missing")
-        assert "intros_t" in list_tables(spark)
-
-    def test_path_schema_reads_footer(self, spark):
-        sch = path_schema(spark, "/root/testdata/sf0.001/region.parquet")
-        assert {f.name for f in sch.fields} >= {"r_regionkey", "r_name"}
-
-    def test_describe_columns_pk_heuristic(self):
-        sch = T.StructType(
-            [
-                T.StructField("id", T.LongType(), False),
-                T.StructField("name", T.StringType(), True),
-            ]
-        )
-        cols = describe_columns(sch)
-        assert (cols[0].name, cols[0].data_type, cols[0].nullable, cols[0].is_primary) == (
-            "id",
-            "bigint",
-            False,
-            True,
-        )
-        assert cols[1].is_primary is False
-
-    def test_describe_columns_explicit_keys(self):
-        sch = T.StructType([T.StructField("a", T.LongType()), T.StructField("b", T.LongType())])
-        cols = describe_columns(sch, keys=["b"])
-        assert [c.is_primary for c in cols] == [False, True]
-
-
-class TestCompatibilityModes:
-    """schema/compat.py: Confluent-style compatibility gates."""
-
-    def _st(self, spec: str):
-        from pyspark.sql.types import _parse_datatype_string
-
-        return _parse_datatype_string(spec)
-
-    def test_backward_allows_nullable_add_and_widening(self):
-        from etl_stream_spark.schema.compat import check_compatibility
-
-        old = self._st("id int, v string")
-        new = self._st("id long, v string, extra string")
-        assert check_compatibility(old, new, "BACKWARD") == []
-
-    def test_backward_rejects_non_nullable_add(self):
-        from pyspark.sql import types as T
-
-        from etl_stream_spark.schema.compat import check_compatibility
-
-        old = T.StructType([T.StructField("id", T.LongType())])
-        new = T.StructType(
-            [
-                T.StructField("id", T.LongType()),
-                T.StructField("req", T.StringType(), nullable=False),
-            ]
-        )
-        v = check_compatibility(old, new, "BACKWARD")
-        assert len(v) == 1 and "non-nullable" in v[0]
-
-    def test_backward_rejects_narrowing(self):
-        from etl_stream_spark.schema.compat import check_compatibility
-
-        old = self._st("v double")
-        new = self._st("v float")
-        assert "not a widening" in check_compatibility(old, new, "BACKWARD")[0]
-
-    def test_forward_rejects_removing_required_column(self):
-        from pyspark.sql import types as T
-
-        from etl_stream_spark.schema.compat import check_compatibility
-
-        old = T.StructType([T.StructField("k", T.LongType(), nullable=False)])
-        new = T.StructType([T.StructField("other", T.StringType())])
-        v = check_compatibility(old, new, "FORWARD")
-        assert any("removed column 'k'" in x for x in v)
-
-    def test_forward_allows_add_and_nullable_remove(self):
-        from etl_stream_spark.schema.compat import check_compatibility
-
-        old = self._st("k long, opt string")  # parsed fields are nullable
-        new = self._st("k long, brand_new double")
-        assert check_compatibility(old, new, "FORWARD") == []
-
-    def test_full_is_union_of_both(self):
-        from etl_stream_spark.schema.compat import check_compatibility
-
-        old = self._st("a int, b double")
-        new = self._st("a long, b float")  # widen a (ok), narrow b (both fail)
-        v = check_compatibility(old, new, "FULL")
-        assert len(v) == 2
-
-    def test_decimal_array_struct_widening(self):
-        from etl_stream_spark.schema.compat import is_widening
-
-        assert is_widening(self._st("x decimal(10,2)")["x"].dataType,
-                           self._st("x decimal(18,2)")["x"].dataType)
-        assert not is_widening(self._st("x decimal(18,4)")["x"].dataType,
-                               self._st("x decimal(18,2)")["x"].dataType)
-        assert is_widening(self._st("x array<int>")["x"].dataType,
-                           self._st("x array<long>")["x"].dataType)
-        assert is_widening(self._st("x struct<a:int>")["x"].dataType,
-                           self._st("x struct<a:long>")["x"].dataType)
-        assert not is_widening(self._st("x struct<a:int>")["x"].dataType,
-                               self._st("x struct<b:long>")["x"].dataType)
-
-    def test_none_mode_and_unknown_mode(self):
-        import pytest as _pytest
-
-        from etl_stream_spark.schema.compat import check_compatibility
-
-        old = self._st("a int")
-        assert check_compatibility(old, self._st("b string"), "NONE") == []
-        with _pytest.raises(ValueError):
-            check_compatibility(old, old, "SIDEWAYS")

@@ -1,127 +1,12 @@
-"""Webhook sink (K4/K5) and schema evolution (§2.8 drift)."""
+"""Schema evolution (§2.8 drift): new-column detection and merge."""
 
 from __future__ import annotations
 
-import json
-import threading
-from http.server import BaseHTTPRequestHandler, HTTPServer
-
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_stream_spark.cdc.merge import ParquetMergeTable
 from etl_stream_spark.schema.evolution import detect_new_columns, evolve_struct
-from etl_stream_spark.sinks.webhook import WebhookSink, post_json
-from etl_stream_spark.streaming.alerting import AlertPayload
-
-
-class _FakeResponse:
-    def __init__(self, status):
-        self.status = status
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *a):
-        return False
-
-
-class TestPostJson:
-    def test_retries_then_succeeds(self):
-        attempts = []
-        sleeps = []
-
-        def opener(req, timeout):
-            attempts.append(req)
-            if len(attempts) < 3:
-                raise OSError("conn refused")
-            return _FakeResponse(200)
-
-        status = post_json(
-            "http://x/hook", {"a": 1}, opener=opener, sleep=sleeps.append
-        )
-        assert status == 200
-        assert sleeps == [1.0, 2.0]  # reference backoff 1s/2s(/4s)
-
-    def test_gives_up_after_all_attempts(self):
-        sleeps = []
-
-        def opener(req, timeout):
-            raise OSError("down")
-
-        with pytest.raises(RuntimeError, match="4 attempts"):
-            post_json("http://x/hook", {}, opener=opener, sleep=sleeps.append)
-        assert sleeps == [1.0, 2.0, 4.0]
-
-    def test_5xx_retried(self):
-        codes = iter([500, 503, 200])
-        sleeps = []
-
-        def opener(req, timeout):
-            return _FakeResponse(next(codes))
-
-        assert post_json("http://x", {}, opener=opener, sleep=sleeps.append) == 200
-        assert len(sleeps) == 2
-
-
-class _Receiver(BaseHTTPRequestHandler):
-    received: list[dict] = []
-
-    def do_POST(self):  # noqa: N802
-        length = int(self.headers["Content-Length"])
-        _Receiver.received.append(json.loads(self.rfile.read(length)))
-        self.send_response(200)
-        self.end_headers()
-
-    def log_message(self, *args):
-        pass
-
-
-@pytest.fixture
-def http_receiver():
-    _Receiver.received = []
-    server = HTTPServer(("127.0.0.1", 0), _Receiver)
-    thread = threading.Thread(target=server.serve_forever, daemon=True)
-    thread.start()
-    yield f"http://127.0.0.1:{server.server_port}/hook", _Receiver.received
-    server.shutdown()
-
-
-class TestWebhookSink:
-    def test_alert_payload_post(self, http_receiver):
-        url, received = http_receiver
-        sink = WebhookSink(url)
-        payload = AlertPayload(
-            type="wal_size",
-            source="s1",
-            status="WARNING",
-            wal_size_mb=4000.0,
-            threshold_mb=3000.0,
-            duration_mins=12.0,
-            timestamp=1.7e9,
-        )
-        assert sink.post_payload(payload) == 200
-        assert received == [
-            {
-                "type": "wal_size",
-                "source": "s1",
-                "status": "WARNING",
-                "wal_size_mb": 4000.0,
-                "threshold_mb": 3000.0,
-                "duration_mins": 12.0,
-                "timestamp": 1.7e9,
-            }
-        ]
-
-    def test_foreach_batch_posts_rows_from_executors(self, spark, http_receiver):
-        url, received = http_receiver
-        df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, tag string")
-        WebhookSink(url).foreach_batch(df, epoch_id=0)
-        assert sorted(received, key=lambda r: r["id"]) == [
-            {"id": 1, "tag": "a"},
-            {"id": 2, "tag": "b"},
-        ]
 
 
 class TestSchemaEvolution:

@@ -28,6 +28,10 @@ from etl_stream_spark.streaming import (
 import tests.test_sources as ts
 
 
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
 class TestAlertStateMachine:
     def setup_method(self):
         self.m = AlertStateMachine(warning_mb=3000, danger_mb=6000, sustain_mins=10)
@@ -394,3 +398,19 @@ class TestCheckpointResume:
 
         landed = sorted(r.id for r in spark.read.parquet(land).collect())
         assert landed == [1, 2, 3, 4, 5, 6]  # no loss, no duplicates
+
+
+class TestStreamingCusumParity:
+    def test_stream_equals_batch_report(self, spark):
+        """The streaming CUSUM monitor must reproduce the batch
+        change-point report exactly — counts are additive, so however
+        the stream is batched the final bucket frame is identical."""
+        from etl_stream_spark.catalog import (
+            events_cusum_changepoint,
+            streaming_cusum_monitor,
+        )
+
+        sf = "/root/testdata/sf0.001"
+        batch = _rows(events_cusum_changepoint(spark, sf))
+        stream = _rows(streaming_cusum_monitor(spark, sf))
+        assert stream == batch

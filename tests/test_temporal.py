@@ -1,14 +1,20 @@
 """As-of and interval join semantics on constructed micro-data (the
 DuckDB ASOF JOIN oracle checks value-exactness at sf0.01; these pin the
-corner cases: inclusive ties, no-match nulls, per-key isolation)."""
+corner cases: inclusive ties, no-match nulls, per-key isolation), and
+autocorrelation against brute-force Pearson."""
 
 from __future__ import annotations
 
 import datetime as dt
+import random
 
 import pyspark.sql.functions as F
 
 from etl_stream_spark.operators.temporal import asof_join, interval_join
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
 
 
 def _ts(s: str) -> dt.datetime:
@@ -175,3 +181,61 @@ class TestInterpolateAt:
         # obs at 0 (v=0) and 90 (v=9): grid 30 → 3.0, grid 60 → 6.0
         got = self._run(spark, [30, 60], [(0, 0.0), (90, 9.0)])
         assert got == {30: 3.0, 60: 6.0}
+
+
+class TestAutocorrelationProperties:
+    def test_periodic_series_has_unit_acf_at_period(self, spark):
+        from etl_stream_spark.operators.temporal import autocorrelation
+
+        series = [(t, [3, 9, 1, 7][t % 4]) for t in range(48)]
+        df = spark.createDataFrame(series, "bucket long, n long")
+        out = {
+            r.lag: r
+            for r in autocorrelation(df, "bucket", "n", lags=(1, 2, 4, 8)).collect()
+        }
+        assert out[4].acf == 1.0 and out[8].acf == 1.0
+        assert out[4].n_pairs == 44
+        assert out[1].acf < 1.0
+
+    def test_constant_series_yields_null_acf(self, spark):
+        from etl_stream_spark.operators.temporal import autocorrelation
+
+        df = spark.createDataFrame(
+            [(t, 5) for t in range(30)], "bucket long, n long"
+        )
+        out = autocorrelation(df, "bucket", "n", lags=(1, 2)).collect()
+        assert all(r.acf is None for r in out)
+
+    def test_matches_bruteforce_pearson(self, spark):
+        from etl_stream_spark.operators.temporal import autocorrelation
+
+        rng = random.Random(13)
+        vals = [rng.randint(0, 50) for _ in range(80)]
+        df = spark.createDataFrame(
+            list(enumerate(vals)), "bucket long, n long"
+        )
+        out = {
+            r.lag: r.acf
+            for r in autocorrelation(df, "bucket", "n", lags=(1, 5)).collect()
+        }
+        for lag in (1, 5):
+            xs, ys = vals[:-lag], vals[lag:]
+            n = float(len(xs))
+            sx, sy = float(sum(xs)), float(sum(ys))
+            sxy = float(sum(x * y for x, y in zip(xs, ys)))
+            sxx = float(sum(x * x for x in xs))
+            syy = float(sum(y * y for y in ys))
+            want = (n * sxy - sx * sy) / (
+                ((n * sxx - sx * sx) * (n * syy - sy * sy)) ** 0.5
+            )
+            assert abs(out[lag] - want) <= 1e-6, lag
+
+    def test_partitioning_invariance(self, spark):
+        from etl_stream_spark.operators.temporal import autocorrelation
+
+        rng = random.Random(17)
+        vals = [(t, rng.randint(0, 9)) for t in range(100)]
+        df = spark.createDataFrame(vals, "bucket long, n long")
+        assert _rows(autocorrelation(df, "bucket", "n")) == _rows(
+            autocorrelation(df.repartition(23), "bucket", "n")
+        )

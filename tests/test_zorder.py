@@ -454,3 +454,27 @@ def test_write_zordered_target_file_bytes_sizes_the_layout(spark, tmp_path):
 
     with _pytest.raises(ValueError):
         write_zordered(df, str(tmp_path / "zz"), "a", "b", target_file_bytes=0)
+
+
+def test_write_zordered_refuses_an_unsized_estimate(spark, tmp_path):
+    """An RDD-backed frame estimates Long.MaxValue bytes; sizing by
+    ``target_file_bytes`` would plan a 2^20-way range partition. It
+    must raise, naming ``num_files``, before any Spark job runs."""
+    import pytest as _pytest
+
+    from etl_stream_spark.plans.zorder import write_zordered
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame(
+        sc.parallelize([(i, i * 7 % 13) for i in range(50)]), "a long, b long"
+    )
+    out = str(tmp_path / "z")
+    sc.setJobGroup("zorder_unsized", "unsized estimate")
+    try:
+        with _pytest.raises(ValueError, match="num_files"):
+            write_zordered(df, out, "a", "b", target_file_bytes=1 << 20)
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert sc.statusTracker().getJobIdsForGroup("zorder_unsized") == []
+    assert not os.path.exists(out)
