@@ -5,8 +5,10 @@ rank 1 (``etl-snowflake-py/etl_snowflake/task.py:168-177``).
 
 Scale notes:
 
-* The window shuffles once on the PK — the same shuffle the subsequent
-  merge join needs, so AQE/exchange-reuse can piggyback on it.
+* The window shuffles once on the PK; the aggregation form
+  (:func:`last_writer_wins_agg`, the merge engine's resolution)
+  pre-reduces each map task to one candidate per key before its
+  shuffle.
 * ``row_number`` needs no frame buffering (rank-only), so the state per
   key is O(1); skewed PKs are impossible by definition (PK ~ unique),
   skew can only come from *hot updating keys*, which is exactly the case
@@ -55,9 +57,8 @@ def last_writer_wins(
     deterministically (repo rule: explicit tie-breaks under every
     row_number), so replaying the same batch always installs the same
     survivor. Callers that must agree on the survivor with a DIFFERENT
-    physical shape of the same rows (the merge engine's eager vs
-    merge-on-read modes) pass an explicit ``tie_break`` column computed
-    over the shared logical shape.
+    physical shape of the same rows pass an explicit ``tie_break``
+    column computed over the shared logical shape.
     """
     if not keys:
         raise ValueError("last_writer_wins requires at least one key column")
@@ -84,9 +85,9 @@ def last_writer_wins_agg(
     task pre-reduces to one candidate per key and the shuffle carries
     ~|keys| rows instead of the whole log — the right plan for full-log
     replays (time travel, final-state reconstruction) where the input
-    is every event ever written. The window form remains the per-batch
-    operator: there the batch is small and its key-shuffle is reused
-    by the merge join that follows.
+    is every event ever written, and for the merge engine, which
+    resolves a batch together with the touched buckets' state
+    (``cdc/merge.py::ParquetMergeTable._resolve``).
 
     Struct comparison is field-by-field, so ``max`` orders by sequence
     first and the tie-break hash second — exactly the window's

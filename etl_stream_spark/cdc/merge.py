@@ -24,8 +24,12 @@ Storage & scale design:
   of the table, not the whole table (the Delta partition-pruned MERGE
   strategy). At 100 TB with e.g. 65 536 buckets, a 1000-row trickle batch
   rewrites ≲1/65 536 of the table per trigger;
-* batch and target shuffle once, on the same key set (the join key), and
-  the dedup window reuses that exchange;
+* one merge algorithm: the batch, projected to the stored shape, is
+  unioned with the touched buckets and collapsed to one generation per
+  key by a partial-aggregatable last-writer-wins ``max`` — one shuffle
+  on the key, carrying ~|keys| rows. The eager mode applies it to every
+  batch; merge-on-read appends batches to an L0 log and applies it to
+  the log once per ``compact_threshold`` batches;
 * no driver-side iteration over data — the only ``collect`` is the
   distinct *bucket id* list (bounded by ``num_buckets``).
 """
@@ -38,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors.exceptions.captured import AnalysisException
 
-from etl_stream_spark.cdc.dedup import last_writer_wins
 from etl_stream_spark.cdc.envelope import (
     OP_DELETE,
     OPERATION_COL,
@@ -82,14 +85,14 @@ def stored_shape_tie_break(
     seq_expr: F.Column,
     deleted_expr: F.Column,
 ) -> F.Column:
-    """THE same-sequence tie-break of the merge engine, shared by the
-    eager and merge-on-read modes: md5 over the data-column values (in
-    sorted column-name order — callers pass them that way), the
-    sequence, and the delete flag. Both engines hashing the same
-    LOGICAL shape is what makes ``merge_on_read`` a true drop-in: on a
-    pathological same-(key, sequence)-different-body collision, the
+    """THE same-sequence tie-break of the merge engine: md5 over the
+    data-column values (in sorted column-name order — callers pass them
+    that way), the sequence, and the delete flag, of a row AS STORED.
+    Every resolution (the eager fold, the merge-on-read drain and the
+    merge-on-read read path) hashes that one shape, so on a
+    pathological same-(key, sequence)-different-body collision the
     survivor is the global max by (sequence, this hash) — independent
-    of batch arrival order, batch cuts, or which engine resolved it.
+    of batch arrival order, batch cuts, or which mode resolved it.
     md5 (not xxhash64) per the repo's engine-portable hashing rule, so
     a DuckDB oracle can mirror the pick."""
     parts = [F.coalesce(v.cast("string"), F.lit("\x00")) for v in values]
@@ -132,21 +135,19 @@ class ParquetMergeTable:
         micro-batches (the Hudi merge-on-read / reference landing-table
         shape — the reference merges once per SCHEDULE, not per batch:
         ``etl-snowflake-py/etl_snowflake/task.py:154-190``). Each merge
-        APPENDS the batch's LWW winners as delta files to the touched
-        buckets — no state read, no join, no partition-overwrite commit
-        — and reads resolve generations with the map-side-combinable
-        LWW aggregation (same sequence ordering + the same stored-shape
-        md5 tie-break as the eager path, so the visible state is
-        identical — including under same-(key, sequence) collisions;
-        see :func:`stored_shape_tie_break`). A bucket whose
-        delta-file count exceeds ``compact_threshold`` is compacted in
-        place on the next merge that touches it. Semantics notes vs the
-        eager default: delete markers persist until compaction even with
-        ``tombstone_deletes=False`` (a strictly smaller replay window),
-        and a batch whose schema DROPS columns falls back to the eager
-        join for that batch (column-absent-keeps-target needs the
-        target's values). Reads pay one extra shuffle — choose eager for
-        read-heavy tables, merge-on-read for trickle ingest."""
+        APPENDS the batch, projected to the stored shape, to an L0
+        delta log — no partition-overwrite commit — and reads resolve
+        generations with the same resolution the eager fold runs, so
+        the visible state is identical, including under same-(key,
+        sequence) collisions (see :func:`stored_shape_tie_break`).
+        Once L0 holds ``compact_threshold`` delta files, the merge that
+        finds them drains L0 into the bucket layout. Semantics notes vs
+        the eager default: delete markers persist until the drain even
+        with ``tombstone_deletes=False`` (a strictly smaller replay
+        window), and a batch whose schema DROPS columns reads the
+        touched buckets' state to fill them, as an eager merge does.
+        Reads pay one extra shuffle while L0 is non-empty — choose eager
+        for read-heavy tables, merge-on-read for trickle ingest."""
         if not keys:
             raise ValueError("ParquetMergeTable requires at least one key column")
         self.spark = spark
@@ -156,8 +157,9 @@ class ParquetMergeTable:
         self.tombstone_deletes = tombstone_deletes
         self.merge_on_read = merge_on_read
         self.compact_threshold = compact_threshold
-        #: cached union of data columns ever stored (MOR sidecar); None
-        #: until loaded. Driver-side only — never row data.
+        #: cached union of data columns ever stored (the
+        #: ``_meta_cols.json`` sidecar); None until loaded. Driver-side
+        #: only — never row data.
         self._stored_cols: list[str] | None = None
         #: the shared L0 append-log machinery (list/sweep/drain gate);
         #: mergeSchema because delta batches may widen the schema
@@ -213,14 +215,15 @@ class ParquetMergeTable:
     def _save_stored_cols(self, cols) -> None:
         import json
 
-        self._stored_cols = sorted(set(cols))
-        write_small_text(self.spark, self._cols_path, json.dumps(self._stored_cols))
+        cols = sorted(set(cols))
+        write_small_text(self.spark, self._cols_path, json.dumps(cols))
+        self._stored_cols = cols
 
     def _resolve(self, raw: DataFrame) -> DataFrame:
-        """Collapse delta generations to the current row per key — the
-        merge-on-read read path. Same winner as the eager merge: max by
-        (sequence, stored-shape md5 tie-break), partial-aggregatable so
-        the shuffle carries ~|keys| rows, not the delta log."""
+        """Collapse generations to the current row per key — the one
+        resolution of the fold and of the merge-on-read read path: max
+        by (sequence, stored-shape md5 tie-break), partial-aggregatable
+        so the shuffle carries ~|keys| rows, not the delta log."""
         from etl_stream_spark.cdc.dedup import last_writer_wins_agg
 
         data = sorted(c for c in raw.columns if c not in _META_COLS)
@@ -306,8 +309,7 @@ class ParquetMergeTable:
         hit = sorted(self._existing_buckets().intersection(buckets))
         if not hit:
             # No state for any touched bucket: semantically an empty
-            # target — merge's first-batch branch writes the identical
-            # result (deletes dropped / tombstoned, sequence renamed).
+            # target — the fold resolves the delta on its own.
             return None
         paths = [f"{self.path}/{BUCKET_COL}={b}" for b in hit]
         try:
@@ -345,112 +347,141 @@ class ParquetMergeTable:
 
     def merge(self, batch: DataFrame) -> None:
         """Apply one CDC micro-batch (rows with OPERATION + SEQUENCE
-        metadata columns; DELETE rows may carry PKs only)."""
-        if self.merge_on_read and self._fast_append(batch):
-            return
-        if self.merge_on_read:
-            # eager fallback (narrow batch / sidecar-less table): drain
-            # L0 first — the eager rewrite replaces whole bucket dirs,
-            # and any un-drained delta row it consumed would otherwise
-            # survive in L0 and resurrect dropped keys at read time
-            self.compact()
-        # within-batch winners picked by the SHARED stored-shape
-        # tie-break (not a hash of the raw batch columns): the
-        # merge-on-read path appends colliding rows unresolved and
-        # picks at read time, so both engines must hash the same
-        # logical shape or they could install different survivors
-        data = sorted(c for c in batch.columns if c not in _META_COLS)
-        tie = stored_shape_tie_break(
-            [F.col(c) for c in data],
-            F.col(SEQUENCE_COL),
-            F.col(OPERATION_COL) == OP_DELETE,
-        )
-        deduped = last_writer_wins(
-            batch, self.keys, SEQUENCE_COL, tie_break=tie
-        ).drop(TIMESTAMP_COL)
-        # Persist the per-batch winners: both the bucket probe and the
-        # state write consume them, and without the cache each action
-        # re-runs the LWW shuffle AND the batch's upstream lineage. The
-        # frame is micro-batch-sized (≤ one row per key in the batch) —
-        # the standard foreachBatch cache, not a scale hazard.
-        deduped = deduped.withColumn(BUCKET_COL, self._bucket_expr()).persist()
-        try:
-            self._merge_deduped(deduped)
-            if self.merge_on_read:
-                # eager fallback in MOR mode consolidated the touched
-                # buckets; record the (possibly widened) schema
-                stored = self._load_stored_cols() or []
-                batch_data = [c for c in deduped.columns if c not in _META_COLS]
-                self._save_stored_cols(set(stored) | set(batch_data))
-        finally:
-            deduped.unpersist()
+        metadata columns; DELETE rows may carry PKs only).
 
-    def _fast_append(self, batch: DataFrame) -> bool:
-        """Merge-on-read fast path: ONE Spark job — project the raw
-        batch to the stored shape (data cols + ``_seq`` + ``_deleted``
-        marker + bucket) and append it. No state read, no join, no
-        within-batch dedup: read-time resolution collapses generations
-        by the same sequence ordering, with the SHARED stored-shape
-        md5 tie-break (:func:`stored_shape_tie_break`) both engines
-        use. The survivor of any same-(key, sequence) collision is
-        therefore the global max by (sequence, tie) in BOTH modes —
-        ``merge_on_read`` is a drop-in under arbitrary inputs in
-        tombstone mode (property-tested). The one remaining asymmetry
-        is inherent to non-tombstone deletes: a physically-removed row
-        leaves no tie state, so an equal-sequence replay arriving
-        AFTER the eager engine dropped the row re-inserts, while an
-        un-drained L0 marker may still out-hash it — the documented
-        non-tombstone replay window, unchanged.
-
-        Returns False — caller runs the eager join — when the batch
-        schema is NARROWER than the stored one: column-absent-keeps-
-        target needs the target's values, since resolution takes the
-        whole winning row. The sidecar tracking the stored column union
-        makes that check one cached driver-side set comparison."""
-        batch_data = [
-            c for c in batch.columns if c not in _META_COLS
-        ]
-        stored = self._load_stored_cols()
-        if stored is None and self.exists():
-            # pre-MOR table without a sidecar: eager-merge this batch
-            # (consolidating the touched buckets), then seed the sidecar
-            # from the FULL stored schema (one mergeSchema root read —
-            # untouched buckets may hold wider columns) so no later
-            # fast-path append can miss a keeps-target column
+        Both engines run the same steps: project the raw batch to the
+        stored shape (data cols + ``_seq`` + ``_deleted`` marker +
+        bucket), fill the stored columns the batch schema lacks from
+        the current state, then either append the frame to L0
+        (``merge_on_read``) or :meth:`_fold` it into the touched
+        buckets right away. No within-batch dedup: resolution collapses
+        generations by sequence with the SHARED stored-shape md5
+        tie-break (:func:`stored_shape_tie_break`), so the survivor of
+        any same-(key, sequence) collision is the global max by
+        (sequence, tie) whichever engine, batch cut or drain cadence
+        resolved it. The one asymmetry left is inherent to
+        non-tombstone deletes: a physically-removed row leaves no tie
+        state, so an equal-sequence replay arriving after a fold
+        re-inserts, while an un-drained L0 marker may still out-hash it
+        — the documented non-tombstone replay window."""
+        batch_data = [c for c in batch.columns if c not in _META_COLS]
+        known = self._load_stored_cols()
+        if known is None:
+            # a table without a sidecar (new, or written before one
+            # existed): seed it from the FULL stored schema — one
+            # mergeSchema root read, since untouched buckets may hold
+            # wider columns no bucket-pruned read would see
             full = self._read_files()
-            table_cols = [] if full is None else [
+            stored = [] if full is None else [
                 c for c in full.columns if c not in _META_COLS
             ]
-            self._stored_cols = sorted(set(table_cols) | set(batch_data))
-            return False  # merge() runs eager, then persists the sidecar
-        if stored is not None and not set(stored) <= set(batch_data):
-            return False
-        delta = batch.drop(TIMESTAMP_COL).select(
+        else:
+            stored = known
+        if known is None or not set(batch_data) <= set(stored):
+            # the widened sidecar is saved BEFORE the data it describes:
+            # a crash between the two leaves an extra sidecar column,
+            # which the fill below finds nothing for — never stored data
+            # that a later narrow batch would not know to keep
+            self._save_stored_cols([*stored, *batch_data])
+        frame = batch.select(
             *[F.col(c) for c in batch_data],
             F.col(SEQUENCE_COL).alias(SEQ_STATE_COL),
             (F.col(OPERATION_COL) == OP_DELETE).alias(DELETED_COL),
             self._bucket_expr().alias(BUCKET_COL),
         )
+        absent = [c for c in stored if c not in batch_data]
+        if absent:
+            frame = self._fill_absent(frame, absent)
+        if not self.merge_on_read:
+            self._fold(frame)
+            return
         # L0 append: unpartitioned, shuffle-free, one directory — the
         # committer stages a handful of files instead of one per bucket
         # (measured ~4× cheaper than a partitionBy append). The bucket
-        # id rides along as a NORMAL column; compaction redistributes
-        # it into the bucket layout.
-        self._l0.append(delta)
-        if stored is None or set(batch_data) - set(stored):
-            self._save_stored_cols(set(stored or []) | set(batch_data))
-        # counter-gated compaction: restart-resumed counter, one
-        # listing per threshold
+        # id rides along as a NORMAL column; the drain redistributes it
+        # into the bucket layout.
+        self._l0.append(frame)
+        # counter-gated drain: restart-resumed counter, one listing per
+        # threshold
         self._l0.maybe_sweep(self.compact)
-        return True
+
+    def _fill_absent(self, frame: DataFrame, absent: list[str]) -> DataFrame:
+        """Column-absent-keeps-target: a stored column absent from the
+        batch SCHEMA takes the key's current value — the producer said
+        nothing about that column (an older producer, or a table whose
+        schema grew after the event was written), so overwriting it
+        with NULL would erase data no event deleted. (A NULL *value* in
+        a present column is a statement and still overwrites.)
+
+        A delete takes a typed NULL instead: a tombstone marks the row
+        deleted, and retention demands the pre-image not linger on it
+        until compaction — Kafka-tombstone semantics. Resolution hashes
+        the filled row, so the tie-break compares rows AS STORED.
+
+        One bucket-pruned left join against the touched buckets'
+        state. A stored column that no touched bucket holds has no
+        value to keep and stays absent from the frame."""
+        touched = [r[0] for r in frame.select(BUCKET_COL).distinct().collect()]
+        state = self._read_state(touched) if touched else None
+        fill = [] if state is None else [c for c in absent if c in state.columns]
+        if not fill:
+            return frame
+        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in self.keys]
+        joined = frame.alias("b").join(
+            state.select(*self.keys, *fill).alias("t"), cond, "left"
+        )
+        return joined.select(
+            *[F.col(f"b.{c}") for c in frame.columns],
+            *[
+                F.when(F.col(f"b.{DELETED_COL}"), F.lit(None))
+                .otherwise(F.col(f"t.{c}"))
+                .alias(c)
+                for c in fill
+            ],
+        )
+
+    def _fold(self, delta: DataFrame) -> None:
+        """Resolve stored-shape ``delta`` rows into the bucket layout:
+        read the buckets they touch, collapse base ∪ delta to one
+        generation per key (:meth:`_resolve`) and rewrite those
+        directories. With ``tombstone_deletes=False`` winning delete
+        markers are dropped here, rows and column both — after this
+        point a sub-delete-sequence replay can re-insert, the
+        non-tombstone contract."""
+        # persisted: the bucket probe and the write both consume the
+        # delta, and without the cache each action re-runs its upstream
+        # lineage (the decoded batch). Micro-batch- or L0-sized — the
+        # standard foreachBatch cache, not a scale hazard.
+        delta = delta.persist()
+        try:
+            # Distinct bucket ids — bounded by num_buckets, the only
+            # driver-side collect of the fold.
+            touched = [r[0] for r in delta.select(BUCKET_COL).distinct().collect()]
+            if not touched:
+                return
+            base = self._read_files(touched)
+            raw = (
+                delta
+                if base is None
+                else base.unionByName(delta, allowMissingColumns=True)
+            )
+            resolved = self._resolve(raw)
+            if not self.tombstone_deletes and DELETED_COL in resolved.columns:
+                # drop the marker column too, not just the marker rows:
+                # bucket dirs must stay column-identical whichever
+                # writer folded them, or _read_state consumers would see
+                # _deleted=false appear and vanish
+                resolved = resolved.filter(
+                    ~F.coalesce(F.col(DELETED_COL), F.lit(False))
+                ).drop(DELETED_COL)
+            # an empty target has no stale bucket directory to delete
+            self._write(resolved, touched=None if base is None else touched)
+        finally:
+            delta.unpersist()
 
     def compact(self) -> None:
-        """Drain the L0 delta log into the bucket layout: resolve every
-        bucket L0 touches to one generation per key and rewrite those
-        directories, then delete the consumed L0 files. With
-        ``tombstone_deletes=False`` resolved delete markers are dropped
-        here — after this point a sub-delete-sequence replay can
-        re-insert, exactly the eager non-tombstone contract.
+        """Drain the L0 delta log into the bucket layout: :meth:`_fold`
+        every L0 row, then delete the consumed L0 files.
 
         Crash window: after the bucket rewrite, before the L0 deletes —
         consumed rows exist twice; re-resolving picks the identical
@@ -461,166 +492,8 @@ class ParquetMergeTable:
         l0_files = self._l0.files()
         if not l0_files:
             return
-        l0 = self.spark.read.option("mergeSchema", "true").parquet(*l0_files)
-        touched = [r[0] for r in l0.select(BUCKET_COL).distinct().collect()]
-        base = self._read_files(touched)
-        raw = (
-            l0
-            if base is None
-            else base.unionByName(l0, allowMissingColumns=True)
-        )
-        resolved = self._resolve(raw)
-        if not self.tombstone_deletes and DELETED_COL in resolved.columns:
-            # drop the marker column too, not just the marker rows:
-            # compacted bucket dirs must stay column-identical to the
-            # eager engine (and to the drained-L0 raw read path), or
-            # _read_state consumers would see _deleted=false appear and
-            # vanish depending on whether L0 happened to be drained
-            resolved = resolved.filter(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            ).drop(DELETED_COL)
-        self._write(resolved, touched=touched)
+        self._fold(self.spark.read.option("mergeSchema", "true").parquet(*l0_files))
         self._l0.delete_files(l0_files)
-
-    def _merge_deduped(self, deduped: DataFrame) -> None:
-        # Distinct bucket ids in this batch — bounded by num_buckets, the
-        # only driver-side collect in the merge.
-        touched = [r[0] for r in deduped.select(BUCKET_COL).distinct().collect()]
-        if not touched:
-            return
-
-        target = self._read_state(buckets=touched)
-        if target is None:
-            first = deduped
-            if self.tombstone_deletes:
-                # even a never-matched DELETE leaves a marker: an insert
-                # for the key replayed later (out of order) must lose
-                first = first.withColumn(
-                    DELETED_COL, F.col(OPERATION_COL) == OP_DELETE
-                )
-            else:
-                first = first.filter(F.col(OPERATION_COL) != OP_DELETE)
-            result = first.withColumnRenamed(SEQUENCE_COL, SEQ_STATE_COL).drop(
-                OPERATION_COL
-            )
-            self._write(result)
-            return
-
-        b = deduped.alias("b")
-        t = target.alias("t")
-        t_data = [c for c in target.columns if c not in _META_COLS]
-        b_data = [c for c in deduped.columns if c not in _META_COLS]
-        all_data = t_data + [c for c in b_data if c not in t_data]
-
-        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in self.keys]
-        joined = t.join(b, cond, "full_outer")
-
-        matched = F.col(f"t.{SEQ_STATE_COL}").isNotNull()
-        has_src = F.col(f"b.{SEQUENCE_COL}").isNotNull()
-        is_delete = F.col(f"b.{OPERATION_COL}") == OP_DELETE
-        t_deleted = (
-            F.coalesce(F.col(f"t.{DELETED_COL}"), F.lit(False))
-            if DELETED_COL in target.columns
-            else F.lit(False)
-        )
-        # Stored-value accessors shared by the tie-break and the output
-        # projection: ``_b_stored`` is the value the row WOULD hold if
-        # the source won — the batch's own column when present; for a
-        # column absent from the batch schema, the keeps-target value on
-        # update and a typed NULL on a winning delete (Kafka-tombstone
-        # scrub; see pick() below for the full rationale).
-        def _t_stored(col: str) -> F.Column:
-            return F.col(f"t.{col}") if col in t_data else F.lit(None)
-
-        def _b_stored(col: str) -> F.Column:
-            if col in b_data:
-                return F.col(f"b.{col}")
-            return F.when(is_delete, F.lit(None)).otherwise(_t_stored(col))
-
-        # Stale guard: a matched source row wins with a newer sequence
-        # (zero-padded strings → lexicographic order == event order).
-        # On an EQUAL sequence — an at-least-once redelivery, possibly
-        # with a different body — the stored-shape tie-break decides:
-        # both sides hash the row AS IT WOULD BE STORED (keeps-target
-        # fill included, via the same accessors the output projection
-        # uses), so the installed survivor is the max-hash stored
-        # outcome — the same pick the merge-on-read resolution makes on
-        # its stored rows, independent of batch cuts or arrival order.
-        all_sorted = sorted(all_data)
-        tie_t = stored_shape_tie_break(
-            [_t_stored(c) for c in all_sorted],
-            F.col(f"t.{SEQ_STATE_COL}"),
-            t_deleted,
-        )
-        tie_b = stored_shape_tie_break(
-            [_b_stored(c) for c in all_sorted],
-            F.col(f"b.{SEQUENCE_COL}"),
-            is_delete,
-        )
-        src_wins = has_src & (
-            ~matched
-            | (F.col(f"b.{SEQUENCE_COL}") > F.col(f"t.{SEQ_STATE_COL}"))
-            | (
-                (F.col(f"b.{SEQUENCE_COL}") == F.col(f"t.{SEQ_STATE_COL}"))
-                & (tie_b > tie_t)
-            )
-        )
-
-        if self.tombstone_deletes:
-            # every key survives physically; deletion is a state bit the
-            # stale guard protects like any other column
-            keep = F.lit(True)
-        else:
-            # WHEN MATCHED/NOT MATCHED + DELETE with a winning (newer)
-            # source sequence → row disappears; stale source or no
-            # source → keep target.
-            keep = ~(src_wins & is_delete) & (matched | (src_wins & ~is_delete))
-
-        def pick(col: str) -> F.Column:
-            # a column absent from the batch SCHEMA keeps the target's
-            # value on matched update: the producer said nothing about
-            # that column (an older producer, or a table whose schema
-            # grew after the event was written), so overwriting it
-            # with NULL would erase data no event deleted. (A NULL
-            # *value* in a present column is a statement and still
-            # overwrites.)
-            #
-            # A WINNING DELETE also takes the batch side — and when the
-            # column is ABSENT from a PK-only delete's schema, a typed
-            # NULL, never the keeps-target fallback: a tombstone marks
-            # the row deleted, and retention demands the pre-image not
-            # linger on it until compaction — Kafka-tombstone
-            # semantics. (Only reachable in tombstone mode; winning
-            # deletes are filtered out otherwise.)
-            return (
-                F.when(src_wins, _b_stored(col))
-                .otherwise(_t_stored(col))
-                .alias(col)
-            )
-
-        key_exprs = [
-            F.coalesce(F.col(f"t.{k}"), F.col(f"b.{k}")).alias(k) for k in self.keys
-        ]
-        non_key_data = [c for c in all_data if c not in self.keys]
-        seq_expr = (
-            F.when(src_wins, F.col(f"b.{SEQUENCE_COL}"))
-            .otherwise(F.col(f"t.{SEQ_STATE_COL}"))
-            .alias(SEQ_STATE_COL)
-        )
-        bucket_expr = (
-            F.coalesce(F.col(f"t.{BUCKET_COL}"), F.col(f"b.{BUCKET_COL}"))
-            .alias(BUCKET_COL)
-        )
-
-        extra = []
-        if self.tombstone_deletes or DELETED_COL in target.columns:
-            extra.append(
-                F.when(src_wins, is_delete).otherwise(t_deleted).alias(DELETED_COL)
-            )
-        result = joined.filter(keep).select(
-            *key_exprs, *[pick(c) for c in non_key_data], seq_expr, bucket_expr, *extra
-        )
-        self._write(result, touched=touched)
 
     def purge_keys(self, keys_df: DataFrame) -> int:
         """Compliance erasure (right-to-be-forgotten): physically remove

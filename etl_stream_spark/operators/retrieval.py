@@ -217,7 +217,7 @@ class PostingsIndex:
 
         if self._fwd_table is None:
             # merge_on_read: each upsert/removal is ONE shuffle-free L0
-            # append instead of an eager join + partitioned rewrite —
+            # append instead of an eager fold + partitioned rewrite —
             # the fwd merge was most of the upsert's per-batch constant
             self._fwd_table = ParquetMergeTable(
                 self.spark,

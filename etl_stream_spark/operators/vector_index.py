@@ -106,7 +106,7 @@ class IvfIndex:
         """id → (cell, generation), bucket-pruned lookups by id.
 
         merge_on_read: the per-upsert map maintenance is ONE shuffle-free
-        L0 append instead of an eager join + 32-directory partitioned
+        L0 append instead of an eager fold + 32-directory partitioned
         rewrite — the map merge was most of the upsert's per-batch
         constant (the same job-count cut as the postings fwd table)."""
         if self._map_table is None:

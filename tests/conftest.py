@@ -17,29 +17,50 @@ def spark():
     yield spark
 
 
+class _CatalogFrames:
+    """Lazily-built catalog entries, one DataFrame per entry.
+
+    Call with an entry name for its DataFrame; read ``df.schema`` or
+    the analyzed plan freely. The physical plan goes through
+    :meth:`physical`, which allows one force per entry: QueryExecution
+    caches ``executedPlan``, so a second physical consumer under
+    different session confs (AQE toggles) would silently read the first
+    one's plan."""
+
+    def __init__(self, spark) -> None:
+        self._spark = spark
+        self._frames: dict = {}
+        self._forced: set[str] = set()
+
+    def __call__(self, name: str):
+        if name not in self._frames:
+            from etl_stream_spark.catalog import CATALOG
+
+            self._frames[name] = CATALOG[name].fn(self._spark, SF_SMOKE)
+        return self._frames[name]
+
+    def physical(self, name: str) -> str:
+        """The executed plan of ``name``, as a string."""
+        if name in self._forced:
+            raise AssertionError(
+                f"{name}: the shared frame's physical plan was already forced; "
+                "a second physical consumer must build its own frame"
+            )
+        self._forced.add(name)
+        return self(name)._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="session")
 def catalog_frames(spark):
     """Session-shared, lazily-built sf0.001 catalog entries. Four
     whole-catalog sweeps (boundary types, broadcast hints, global
     windows, cartesian products) each called every entry's ``fn`` —
     four full constructions of ~190 entries, ~10 min of the suite's
-    wall on a degraded box (r8 verdict item 2: the driver's pytest gate
-    timed out). Entry fns are pure constructions (scratch side effects
-    are per-(tag,pid) overwrite-idempotent), so ONE DataFrame per entry
-    serves every sweep. Safe sharing rule: consumers may read
-    ``df.schema`` / the ANALYZED plan freely; at most one consumer may
-    force the PHYSICAL plan (QueryExecution caches executedPlan, so a
-    second physical consumer under different session confs — AQE
-    toggles — would silently read the first one's plan). Today that
-    one physical consumer is the cartesian sweep; the AQE-off ceiling
-    suite deliberately builds its own frames."""
-    from etl_stream_spark.catalog import CATALOG
-
-    cache: dict = {}
-
-    def get(name: str):
-        if name not in cache:
-            cache[name] = CATALOG[name].fn(spark, "/root/testdata/sf0.001")
-        return cache[name]
-
-    return get
+    wall on a degraded box. Entry fns are pure constructions (scratch
+    side effects are per-(tag,pid) overwrite-idempotent), so ONE
+    DataFrame per entry serves every sweep. At most one consumer may
+    force the PHYSICAL plan, through ``catalog_frames.physical``, which
+    raises on a second force. Today that one physical consumer is the
+    cartesian sweep; the AQE-off ceiling suite deliberately builds its
+    own frames."""
+    return _CatalogFrames(spark)

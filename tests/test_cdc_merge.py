@@ -510,17 +510,21 @@ class TestMergeOnRead:
         t.compact()
         assert state_dict(t) == {}
 
-    def test_narrow_batch_falls_back_and_keeps_target_columns(self, spark, tmp_path):
+    def test_narrow_batch_appends_and_keeps_target_columns(self, spark, tmp_path):
         t = self._mor(spark, tmp_path, threshold=50)
         t.merge(make_batch(spark, [ev(1, "a", 7, OP_INSERT, 0)]))
         narrow = spark.createDataFrame(
             [(1, "b", OP_UPDATE, make_sequence(1_700_000_000_000_000, 5))],
             "id long, name string, operation string, sequence string",
-        )
-        t.merge(narrow)  # qty absent from batch schema → eager fallback
+        ).coalesce(1)
+        depth = len(t._l0.files())
+        t.merge(narrow)  # qty absent from batch schema → filled from state
+        # a narrow batch is appended like any other (one partition, one
+        # file), not drained
+        assert len(t._l0.files()) == depth + 1
         assert state_dict(t) == {1: ("b", 7)}  # qty kept from target
-        # the fallback drained L0: no deltas left to resurrect anything
-        assert t._l0.files() == []
+        t.compact()
+        assert state_dict(t) == {1: ("b", 7)}
 
     def test_compaction_bounds_files_and_preserves_state(self, spark, tmp_path):
         t = self._mor(spark, tmp_path, threshold=2)
@@ -608,6 +612,60 @@ class TestMergeOnRead:
         # marker survived compaction: stale replay still loses
         t.merge(make_batch(spark, [ev(1, "a", 1, OP_INSERT, 0)]))
         assert state_dict(t) == {}
+
+
+class TestSchemaSidecar:
+    @pytest.mark.parametrize("mor", [False, True], ids=["eager", "mor"])
+    def test_sidecar_is_widened_before_the_data_it_describes(
+        self, spark, tmp_path, mor
+    ):
+        """``_meta_cols.json`` lists every data column the table stores,
+        so a later batch lacking one keeps the target's value. A crash
+        between the sidecar write and the data write must not leave
+        stored data the sidecar does not cover: after a restart, a
+        narrow update would drop the column it never heard of."""
+        path = str(tmp_path / "t")
+
+        def open_table():
+            return ParquetMergeTable(
+                spark,
+                path,
+                keys=["id"],
+                num_buckets=4,
+                merge_on_read=mor,
+                compact_threshold=50,
+            )
+
+        narrow_schema = "id long, name string, operation string, sequence string"
+
+        def narrow(name, seq_idx):
+            seq = make_sequence(1_700_000_000_000_000, seq_idx)
+            return spark.createDataFrame([(1, name, OP_UPDATE, seq)], narrow_schema)
+
+        t = open_table()
+        t.merge(narrow("a", 0))
+
+        def crash(cols):
+            raise RuntimeError("crash during the sidecar write")
+
+        t._save_stored_cols = crash
+        wide = make_batch(spark, [ev(1, "a", 7, OP_UPDATE, 1)])
+        with pytest.raises(RuntimeError, match="crash"):
+            t.merge(wide)
+
+        def qty(table):  # None while no stored file holds the column
+            return [r.asDict().get("qty") for r in table.read().collect()]
+
+        # restart: whatever the crash left visible, a narrow update keeps
+        t = open_table()
+        kept = qty(t)
+        t.merge(narrow("b", 2))
+        assert qty(t) == kept
+
+        # the restarted writer widens the sidecar on the next wide batch
+        t.merge(make_batch(spark, [ev(1, "b", 7, OP_UPDATE, 3)]))
+        t.merge(narrow("c", 4))
+        assert state_dict(t) == {1: ("c", 7)}
 
 
 class TestMorStateConsumers:

@@ -10,7 +10,11 @@ core path fails here, and one that removes a job updates the pins.
 
 Jobs are counted by the job-id delta around each batch, read after the
 listener bus drains. Job groups are thread-local and would miss the
-jobs the applier's per-table pool threads submit.
+jobs the applier's per-table pool threads submit. The same job range
+also gives the source input records per change row, summed from the
+status store the way ``perfbench/run.py::StatusCounters`` sums them:
+every record a non-skipped stage reads, from a file or from a cached
+block, counts.
 """
 
 from __future__ import annotations
@@ -37,18 +41,48 @@ PAYLOAD = T.StructType(
 #: fused table discovery (an AQE map stage plus the result) and one L0
 #: append per table
 MOR_NON_DRAIN_JOBS = 5
-#: the 8th append of each table also drains its L0 (9 jobs per table)
-MOR_DRAIN_JOBS = 32
-#: two eager tables: the first batch writes into empty targets, later
-#: ones join and rewrite the touched buckets (13 jobs per table)
+#: the 8th append of each table also folds its L0 into the bucket
+#: layout (8 jobs per table)
+MOR_DRAIN_JOBS = 29
+#: two eager tables, each folding its batch into the touched buckets:
+#: the first batch into empty targets (8 jobs per table), later ones
+#: with a bucket read and an emptied-bucket probe (11 jobs per table)
 EAGER_FIRST_JOBS = 16
-EAGER_JOBS = 26
+EAGER_JOBS = 22
+#: source input records per change row, over the whole run: the
+#: decoded batch is read once per table write, and the fold also reads
+#: the touched buckets' state
+MOR_INPUT_RECORDS_PER_ROW = 4.91
+EAGER_INPUT_RECORDS_PER_ROW = 3.87
 
 
 def _last_job(spark) -> int:
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+def _input_records(spark, first: int, last: int) -> int:
+    """Records read by the non-skipped stages of jobs ``first..last``.
+
+    A job lists the stages of the shuffles it reuses under their
+    original ids. The store may already have evicted such a stage
+    (``spark.ui.retainedStages``) when an earlier job ran it long ago;
+    it did not run in this job, so it counts like a skipped one."""
+    from py4j.protocol import Py4JJavaError
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+    total = 0
+    for jid in range(first, last + 1):
+        sids = store.job(jid).stageIds()
+        for i in range(sids.size()):
+            try:
+                st = store.lastStageAttempt(sids.apply(i))
+            except Py4JJavaError:
+                continue
+            if st.status().toString() != "SKIPPED":
+                total += st.inputRecords()
+    return total
 
 
 def _batches(tables: list[str], n_batches: int, rows_per_table: int, seed: int):
@@ -105,20 +139,27 @@ def _run(spark, root, tables, merge_on_read, n_batches, rows_per_table, seed):
         frames.append(spark.read.schema("value string").parquet(path))
     # the main thread may carry a job group left by an earlier test
     spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-    jobs = []
+    jobs, records = [], 0
     for epoch, raw in enumerate(frames):
         j0 = _last_job(spark)
         app.apply_batch(decode_cdc_json(raw, PAYLOAD), epoch)
-        jobs.append(_last_job(spark) - j0)
+        j1 = _last_job(spark)
+        jobs.append(j1 - j0)
+        records += _input_records(spark, j0 + 1, j1)
     for t in tables:
         got = {r["id"]: r["name"] for r in app.target(t).read().collect()}
         assert got == want[t], t
-    return jobs
+    return jobs, round(records / (n_batches * len(tables) * rows_per_table), 2)
 
 
 def test_core_path_job_ledger(spark, tmp_path):
-    mor = _run(spark, tmp_path / "mor", ["t0", "t1", "t2"], True, 9, 67, seed=3)
+    mor, mor_records = _run(
+        spark, tmp_path / "mor", ["t0", "t1", "t2"], True, 9, 67, seed=3
+    )
+    eager, eager_records = _run(
+        spark, tmp_path / "eager", ["e0", "e1"], False, 3, 100, seed=5
+    )
     assert mor == [MOR_NON_DRAIN_JOBS] * 7 + [MOR_DRAIN_JOBS, MOR_NON_DRAIN_JOBS], mor
-
-    eager = _run(spark, tmp_path / "eager", ["e0", "e1"], False, 3, 100, seed=5)
+    assert mor_records == MOR_INPUT_RECORDS_PER_ROW, mor_records
     assert eager == [EAGER_FIRST_JOBS, EAGER_JOBS, EAGER_JOBS], eager
+    assert eager_records == EAGER_INPUT_RECORDS_PER_ROW, eager_records

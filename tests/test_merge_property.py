@@ -214,9 +214,9 @@ def test_modes_agree_under_sequence_collisions(
 def test_narrow_batch_collision_is_arrival_order_independent(spark, tmp_path):
     """Same-(key, sequence) collisions carried by NARROW batches (a
     column missing from the batch schema) must still install one
-    arrival-order-independent survivor: the tie hashes the row AS IT
-    WOULD BE STORED (keeps-target fill), so both arrival orders compare
-    the same two stored outcomes."""
+    arrival-order-independent survivor, on either engine: the tie
+    hashes the row AS IT WOULD BE STORED (keeps-target fill), so both
+    arrival orders compare the same two stored outcomes."""
     from pyspark.sql import functions as F
 
     base = spark.createDataFrame(
@@ -231,21 +231,23 @@ def test_narrow_batch_collision_is_arrival_order_independent(spark, tmp_path):
         [(1, 7, "UPDATE", make_sequence(1_700_000_000_000_000, 5))], narrow
     )
     states = []
-    for order in ((n9, n7), (n7, n9)):
-        t = ParquetMergeTable(
-            spark,
-            str(tmp_path / f"nb_{id(order)}"),
-            keys=["id"],
-            num_buckets=4,
-            tombstone_deletes=True,
-        )
-        t.merge(base.withColumn("cdc_timestamp", F.current_timestamp()))
-        for b in order:
-            t.merge(b.withColumn("cdc_timestamp", F.current_timestamp()))
-        states.append(
-            tuple(sorted((r["id"], r["a"], r["b"]) for r in t.read().collect()))
-        )
-    assert states[0] == states[1]
+    for mor in (False, True):
+        for order in ((n9, n7), (n7, n9)):
+            t = ParquetMergeTable(
+                spark,
+                str(tmp_path / f"nb_{mor}_{id(order)}"),
+                keys=["id"],
+                num_buckets=4,
+                tombstone_deletes=True,
+                merge_on_read=mor,
+            )
+            t.merge(base.withColumn("cdc_timestamp", F.current_timestamp()))
+            for b in order:
+                t.merge(b.withColumn("cdc_timestamp", F.current_timestamp()))
+            states.append(
+                tuple(sorted((r["id"], r["a"], r["b"]) for r in t.read().collect()))
+            )
+    assert len(set(states)) == 1, states
     # the loser arrived in both orders, so the survivor is the max-hash
     # stored outcome, and the kept column survives either way
     assert states[0][0][2] == 2

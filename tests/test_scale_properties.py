@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from etl_stream_spark.cdc import OP_INSERT, OP_UPDATE, ParquetMergeTable, make_sequence
 
@@ -317,14 +318,25 @@ def test_no_cartesian_product_in_any_batch_plan(spark, catalog_frames):
         if name in skip:
             continue
         try:
-            df = catalog_frames(name)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = catalog_frames.physical(name)
         except Exception as exc:  # noqa: BLE001
             offenders.append(f"{name}: PLAN ERROR {exc}")
             continue
         if "CartesianProduct" in plan:
             offenders.append(name)
     assert not offenders, offenders
+
+
+def test_catalog_frames_allow_one_physical_force(spark):
+    from etl_stream_spark.catalog import CATALOG
+
+    from tests.conftest import _CatalogFrames
+
+    frames = _CatalogFrames(spark)
+    name = next(iter(CATALOG))
+    assert frames.physical(name)
+    with pytest.raises(AssertionError, match="already forced"):
+        frames.physical(name)
 
 
 #: Entries whose broadcast HINT sits over a frame derived from an
