@@ -8037,7 +8037,7 @@ FROM final_state GROUP BY event_type
 def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution through the merge engine (reference §3.3): the
     second half of the log arrives with a column the first half lacks
-    (``props_len``); the merge widens the target (mergeSchema), earlier
+    (``props_len``); the merge widens the target's typed schema, earlier
     winners read null for it, and later winners carry both old and new
     fields. The oracle reproduces the widened final state from the raw
     log, so the evolution path must lose no rows and null-fill exactly."""

@@ -67,10 +67,8 @@ class IncrementalJoinView:
         self._refresh_seq = self._stored_refresh_seq()
 
     def _fact_cols_guess(self) -> set[str]:
-        state = self.fact._read_state()
-        if state is None:
-            return set(self.fact.keys) | set(self.fk_cols)
-        return set(state.columns) - {BUCKET_COL, SEQ_STATE_COL}
+        stored = {f.name for f in self.fact.stored_schema().fields}
+        return stored | set(self.fact.keys) | set(self.fk_cols)
 
     def _stored_refresh_seq(self) -> int:
         state = self.view._read_state()
@@ -96,11 +94,10 @@ class IncrementalJoinView:
         fact_state = self.fact._read_state()
         if fact_state is None:
             return
-        present_fks = [c for c in self.fk_cols if c in fact_state.columns]
-        if len(present_fks) < len(self.fk_cols):
-            # fk column(s) never landed in fact state (narrow early
-            # batches under schema evolution): no fact row can
-            # reference a dim key yet
+        if not set(self.fk_cols) <= set(fact_state.columns):
+            # an fk column never landed in fact state (narrow early
+            # batches under schema evolution): no fact row references a
+            # dim key yet
             return
         # narrow (pk, fk) probe of the fact state — columnar pruning
         # keeps this a 2-column scan however wide the fact table is.
@@ -140,46 +137,37 @@ class IncrementalJoinView:
         if not fact_buckets:
             return
         fact_state = self.fact._read_state(buckets=fact_buckets)
-        if fact_state is None:
-            rows = None
-        else:
-            rows = (
-                fact_state.drop(BUCKET_COL, SEQ_STATE_COL)
-                .join(keys_df, self.fact.keys, "left_semi")
-            )
-
         self._refresh_seq += 1
         seq = F.lit(f"{self._refresh_seq:020d}")
 
-        if rows is None:
-            # fact table gone entirely: every key in the batch is a delete
-            deletes = keys_df.withColumn(OPERATION_COL, F.lit(OP_DELETE)).withColumn(
-                SEQUENCE_COL, seq
-            )
-            if self.view._read_state() is not None:
-                self.view.merge(deletes)
+        if fact_state is None:
+            # fact table gone entirely: every key in the batch is a
+            # delete, NULL in every stored view column (the merge types
+            # it), so the merge fills no absent column from view state
+            stored = self.view.stored_schema()
+            if stored:
+                keys = set(self.fact.keys)
+                nulls = [F.lit(None).alias(c) for c in stored.fieldNames() if c not in keys]
+                self.view.merge(
+                    keys_df.select("*", *nulls)
+                    .withColumn(OPERATION_COL, F.lit(OP_DELETE))
+                    .withColumn(SEQUENCE_COL, seq)
+                )
             return
 
+        rows = fact_state.drop(BUCKET_COL, SEQ_STATE_COL).join(
+            keys_df, self.fact.keys, "left_semi"
+        )
         dim_buckets = self._buckets_of(rows, self.fk_cols, self.dim.num_buckets)
-        dim_state = (
-            self.dim._read_state(buckets=dim_buckets) if dim_buckets else None
-        )
-        # payload columns actually present in dim state: schema
-        # evolution means early dim files may lack declared columns —
-        # select only what exists, null-fill the rest like the
-        # dim-absent branch
-        present_payload = (
-            [c for c in self.dim_payload if c in dim_state.columns]
-            if dim_state is not None
-            else []
-        )
+        dim_state = self.dim._read_state(dim_buckets) if dim_buckets else None
+        joined = rows
         if dim_state is not None:
             # alias dim keys so an fk sharing the dim key's name never
             # collides in the join output
             aliased = [f"_dk{i}" for i in range(len(self.dim.keys))]
             dim_rows = dim_state.select(
                 *[F.col(k).alias(a) for k, a in zip(self.dim.keys, aliased)],
-                *present_payload,
+                *[c for c in self.dim_payload if c in dim_state.columns],
             )
             # plain equality, NOT null-safe: a NULL fk must read as
             # unreferenced (the documented LEFT JOIN ON fk = dim_pk
@@ -189,33 +177,14 @@ class IncrementalJoinView:
                 for fk, a in zip(self.fk_cols, aliased)
             ]
             joined = rows.join(dim_rows, cond, "left").drop(*aliased)
-            missing = [c for c in self.dim_payload if c not in present_payload]
-            if missing:
-                vstate = self.view._read_state()
-                vfields = (
-                    {f.name: f.dataType for f in vstate.schema.fields}
-                    if vstate is not None
-                    else {}
-                )
-                for c in missing:
-                    if c in vfields:
-                        joined = joined.withColumn(c, F.lit(None).cast(vfields[c]))
-        else:
-            # The dim table holds no rows at all. If the view already
-            # carries the payload columns, they must be explicitly
-            # nulled (typed from the view's own schema) — a column
-            # absent from the batch would KEEP the stale attribute
-            # under the merge engine's evolution rule. Before the first
-            # dim refresh the view has no payload columns; omit them
-            # (VOID nulls cannot be written) and let schema evolution
-            # add them later.
-            joined = rows
-            vstate = self.view._read_state()
-            if vstate is not None:
-                vfields = {f.name: f.dataType for f in vstate.schema.fields}
-                for c in self.dim_payload:
-                    if c in vfields:
-                        joined = joined.withColumn(c, F.lit(None).cast(vfields[c]))
+        # A payload column the join did not supply (no dim rows, or one
+        # the dim table never stored) is explicitly NULL, not absent: an
+        # absent column would KEEP a stale attribute under the merge
+        # engine's evolution rule. The view's merge types the NULL, or
+        # leaves the column out while the view stores none.
+        for c in self.dim_payload:
+            if c not in joined.columns:
+                joined = joined.withColumn(c, F.lit(None))
 
         upserts = joined.withColumn(OPERATION_COL, F.lit(OP_INSERT)).withColumn(
             SEQUENCE_COL, seq

@@ -30,17 +30,20 @@ Storage & scale design:
   on the key, carrying ~|keys| rows. The eager mode applies it to every
   batch; merge-on-read appends batches to an L0 log and applies it to
   the log once per ``compact_threshold`` batches;
+* one schema: the typed ``_meta_cols.json`` sidecar. Every read of the
+  bucket layout and of L0 passes it, so no read infers a schema;
 * no driver-side iteration over data — the only ``collect`` is the
   distinct *bucket id* list (bounded by ``num_buckets``).
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors.exceptions.captured import AnalysisException
+from pyspark.sql import types as T
 
 from etl_stream_spark.cdc.envelope import (
     OP_DELETE,
@@ -55,6 +58,7 @@ from etl_stream_spark.l0_log import (
     read_small_text,
     write_small_text,
 )
+from etl_stream_spark.schema.evolution import evolve_struct
 
 BUCKET_COL = "_bucket"
 SEQ_STATE_COL = "_seq"
@@ -68,6 +72,19 @@ _META_COLS = (
     SEQ_STATE_COL,
     DELETED_COL,
 )
+
+
+#: the bookkeeping columns every stored row carries after its data columns
+_BOOKKEEPING = [
+    T.StructField(SEQ_STATE_COL, T.StringType()),
+    T.StructField(DELETED_COL, T.BooleanType()),
+    T.StructField(BUCKET_COL, T.IntegerType()),
+]
+
+
+def _live(df: DataFrame) -> DataFrame:
+    """``df`` without delete-marker rows and without the marker column."""
+    return df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
 
 
 def bucket_expr_for(cols: Sequence[str], num_buckets: int):
@@ -146,6 +163,7 @@ class ParquetMergeTable:
         with ``tombstone_deletes=False`` (a strictly smaller replay
         window), and a batch whose schema DROPS columns reads the
         touched buckets' state to fill them, as an eager merge does.
+        L0 is read with the typed schema, as the bucket layout is.
         Reads pay one extra shuffle while L0 is non-empty — choose eager
         for read-heavy tables, merge-on-read for trickle ingest."""
         if not keys:
@@ -157,15 +175,14 @@ class ParquetMergeTable:
         self.tombstone_deletes = tombstone_deletes
         self.merge_on_read = merge_on_read
         self.compact_threshold = compact_threshold
-        #: cached union of data columns ever stored (the
-        #: ``_meta_cols.json`` sidecar); None until loaded. Driver-side
+        #: cached :meth:`stored_schema`; None until loaded. Driver-side
         #: only — never row data.
-        self._stored_cols: list[str] | None = None
-        #: the shared L0 append-log machinery (list/sweep/drain gate);
-        #: mergeSchema because delta batches may widen the schema
-        self._l0 = L0AppendLog(
-            spark, self._delta_path, compact_threshold, merge_schema=True
-        )
+        self._schema: T.StructType | None = None
+        #: the cached schema was seeded from the files, not read from a
+        #: typed sidecar: the next merge saves it
+        self._seeded = False
+        #: the shared L0 append-log machinery (list/sweep/drain gate)
+        self._l0 = L0AppendLog(spark, self._delta_path, compact_threshold)
 
     # -- storage helpers ---------------------------------------------------
 
@@ -193,7 +210,7 @@ class ParquetMergeTable:
                     continue
         return out
 
-    # -- merge-on-read sidecar + resolution ---------------------------------
+    # -- the schema sidecar + resolution ------------------------------------
 
     @property
     def _cols_path(self) -> str:
@@ -201,23 +218,36 @@ class ParquetMergeTable:
         # listing (hiddenFileFilter), so the root read never sees it
         return f"{self.path}/_meta_cols.json"
 
-    def _load_stored_cols(self) -> list[str] | None:
-        if self._stored_cols is not None:
-            return self._stored_cols
-        import json
+    def stored_schema(self) -> T.StructType:
+        """The typed data columns (keys and payload) the table stores:
+        its one schema, kept in the ``_meta_cols.json`` sidecar. A table
+        without a typed sidecar (new, or written when it held names
+        only) is seeded once by a ``mergeSchema`` read of its bucket
+        layout and L0 log; its next merge saves the seed."""
+        if self._schema is not None:
+            return self._schema
+        saved = json.loads(read_small_text(self.spark, self._cols_path) or "null")
+        if isinstance(saved, dict):
+            self._schema = T.StructType.fromJson(saved)
+            return self._schema
+        schema = T.StructType()
+        for paths in ([self.path] if self._existing_buckets() else [], self._l0.files()):
+            if paths:
+                found = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+                data = [f for f in found.schema if f.name not in _META_COLS]
+                schema = evolve_struct(schema, T.StructType(data))
+        self._schema, self._seeded = schema, True
+        return schema
 
-        text = read_small_text(self.spark, self._cols_path)
-        if text is None:
-            return None
-        self._stored_cols = sorted(json.loads(text))
-        return self._stored_cols
+    def _save_stored_cols(self, schema: T.StructType) -> None:
+        write_small_text(self.spark, self._cols_path, schema.json())
+        self._schema, self._seeded = schema, False
 
-    def _save_stored_cols(self, cols) -> None:
-        import json
-
-        cols = sorted(set(cols))
-        write_small_text(self.spark, self._cols_path, json.dumps(cols))
-        self._stored_cols = cols
+    def _reader(self):
+        """A parquet reader of the stored shape (a file written before
+        a column existed reads NULL for it)."""
+        shape = T.StructType(self.stored_schema().fields + _BOOKKEEPING)
+        return self.spark.read.schema(shape)
 
     def _resolve(self, raw: DataFrame) -> DataFrame:
         """Collapse generations to the current row per key — the one
@@ -227,13 +257,8 @@ class ParquetMergeTable:
         from etl_stream_spark.cdc.dedup import last_writer_wins_agg
 
         data = sorted(c for c in raw.columns if c not in _META_COLS)
-        deleted = (
-            F.col(DELETED_COL)
-            if DELETED_COL in raw.columns
-            else F.lit(False)
-        )
         tie = stored_shape_tie_break(
-            [F.col(c) for c in data], F.col(SEQ_STATE_COL), deleted
+            [F.col(c) for c in data], F.col(SEQ_STATE_COL), F.col(DELETED_COL)
         )
         return last_writer_wins_agg(raw, self.keys, SEQ_STATE_COL, tie_break=tie)
 
@@ -249,77 +274,57 @@ class ParquetMergeTable:
         compaction cadence — at most ``compact_threshold`` batches of
         rows — so bucket-pruned readers pay a small bounded scan, not a
         table scan."""
-        df = self._l0.read()
-        if df is None:
+        files = self._l0.files()
+        if not files:
             return None
+        df = self._reader().parquet(*files)
         if buckets is not None:
             df = df.filter(F.col(BUCKET_COL).isin(list(buckets)))
         return df
 
     def _read_state(self, buckets: list[int] | None = None) -> DataFrame | None:
-        raw = self._read_files(buckets)
-        if not self.merge_on_read:
-            return raw
-        l0 = self._read_l0(buckets)
-        if l0 is None:
+        """Current state of ``buckets`` (None: no file holds them): every
+        stored column, ``_seq``, ``_bucket``, and ``_deleted`` on
+        tombstone tables only."""
+        state = self._read_files(buckets)
+        l0 = self._read_l0(buckets) if self.merge_on_read else None
+        if l0 is not None:
             # multi-generation rows exist ONLY in L0: bucket directories
             # are written resolved (one generation per key) and a key
             # hashes to exactly one bucket — so a drained table reads
             # with NO resolution shuffle, same cost as the eager engine
-            return raw
-        raw = l0 if raw is None else raw.unionByName(l0, allowMissingColumns=True)
-        resolved = self._resolve(raw)
-        if not self.tombstone_deletes and DELETED_COL in resolved.columns:
-            # Eager-contract equivalence for every _read_state consumer
-            # (rollups, join views, checksums): a non-tombstone table's
-            # state never contains delete-marker rows, so un-drained L0
-            # markers must not surface as live rows. The marker still
-            # WINS resolution before being filtered, so a stale replay
-            # stays suppressed until compaction physically drops it.
-            resolved = resolved.filter(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            ).drop(DELETED_COL)
-        return resolved
+            state = self._resolve(l0 if state is None else state.unionByName(l0))
+        if state is None or self.tombstone_deletes:
+            return state
+        # Eager-contract equivalence for every _read_state consumer
+        # (rollups, join views, checksums): a non-tombstone table's
+        # state never contains delete-marker rows, so un-drained L0
+        # markers must not surface as live rows. The marker still WINS
+        # resolution before being filtered, so a stale replay stays
+        # suppressed until compaction physically drops it.
+        return _live(state)
 
     def _read_files(self, buckets: list[int] | None = None) -> DataFrame | None:
-        """Read target incl. bookkeeping cols, pruned to ``buckets``.
+        """Read the bucket layout incl. bookkeeping cols, pruned to
+        ``buckets`` (None when no such bucket directory exists).
 
-        Pruning happens at the PATH level, not as a post-scan filter: a
-        root read with mergeSchema lists and footer-reads EVERY file in
-        the table before Catalyst can prune, so per-merge planning cost
-        would grow with total state instead of with the touched buckets
-        (measured 2x per 16x state before this). Reading only the
-        touched ``_bucket=`` directories (``basePath`` keeps the
-        partition column) bounds listing + schema-merge work by the
-        batch's footprint. A column that exists only in unread buckets
-        is simply absent from this merge's output files — the
-        column-absent-keeps-target convention readers already handle."""
+        Pruning happens at the PATH level, not as a post-scan filter:
+        reading only the touched ``_bucket=`` directories (``basePath``
+        keeps the partition column) bounds the listing by the batch's
+        footprint instead of the table's. The read passes the stored
+        schema, so it opens no footer to plan and returns every stored
+        column whichever buckets it opened."""
+        hit = self._existing_buckets()
         if buckets is None:
-            if not self.exists():
-                return None
-            try:
-                return self.spark.read.option("mergeSchema", "true").parquet(
-                    self.path
-                )
-            except AnalysisException:
-                # Directory exists but holds no data files (e.g. an
-                # all-DELETE first batch wrote an empty result) → same as
-                # no target.
-                return None
-        hit = sorted(self._existing_buckets().intersection(buckets))
-        if not hit:
+            paths = [self.path] if hit else []
+        else:
+            hit = sorted(hit.intersection(buckets))
+            paths = [f"{self.path}/{BUCKET_COL}={b}" for b in hit]
+        if not paths:
             # No state for any touched bucket: semantically an empty
             # target — the fold resolves the delta on its own.
             return None
-        paths = [f"{self.path}/{BUCKET_COL}={b}" for b in hit]
-        try:
-            return (
-                self.spark.read.option("mergeSchema", "true")
-                .option("basePath", self.path)
-                .parquet(*paths)
-            )
-        except AnalysisException:
-            return None
+        return self._reader().option("basePath", self.path).parquet(*paths)
 
     def read(self) -> DataFrame:
         """Current merged state (user-facing columns only). Tombstone
@@ -330,9 +335,7 @@ class ParquetMergeTable:
         if state is None:
             return self.spark.createDataFrame([], "struct<>")
         if DELETED_COL in state.columns:
-            state = state.filter(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            ).drop(DELETED_COL)
+            state = _live(state)
         return state.drop(BUCKET_COL, SEQ_STATE_COL)
 
     def truncate(self) -> None:
@@ -340,7 +343,7 @@ class ParquetMergeTable:
         fs, p = _hadoop_fs(self.spark, self.path)
         if fs.exists(p):
             fs.delete(p, True)
-        self._stored_cols = None
+        self._schema, self._seeded = None, False
         self._l0.reset_counter()  # the log died with the table dir
 
     # -- the merge ---------------------------------------------------------
@@ -349,11 +352,12 @@ class ParquetMergeTable:
         """Apply one CDC micro-batch (rows with OPERATION + SEQUENCE
         metadata columns; DELETE rows may carry PKs only).
 
-        Both engines run the same steps: project the raw batch to the
-        stored shape (data cols + ``_seq`` + ``_deleted`` marker +
-        bucket), fill the stored columns the batch schema lacks from
-        the current state, then either append the frame to L0
-        (``merge_on_read``) or :meth:`_fold` it into the touched
+        Both engines run the same steps: widen the stored schema by the
+        batch's (``evolve_struct``, which raises on a type change the
+        stored files cannot take), project the raw batch to the stored
+        shape (data cols + ``_seq`` + ``_deleted`` marker + bucket),
+        fill the stored columns the batch schema lacks from the current
+        state, then either append the frame to L0 (``merge_on_read``) or :meth:`_fold` it into the touched
         buckets right away. No within-batch dedup: resolution collapses
         generations by sequence with the SHARED stored-shape md5
         tie-break (:func:`stored_shape_tie_break`), so the survivor of
@@ -364,32 +368,28 @@ class ParquetMergeTable:
         state, so an equal-sequence replay arriving after a fold
         re-inserts, while an un-drained L0 marker may still out-hash it
         — the documented non-tombstone replay window."""
-        batch_data = [c for c in batch.columns if c not in _META_COLS]
-        known = self._load_stored_cols()
-        if known is None:
-            # a table without a sidecar (new, or written before one
-            # existed): seed it from the FULL stored schema — one
-            # mergeSchema root read, since untouched buckets may hold
-            # wider columns no bucket-pruned read would see
-            full = self._read_files()
-            stored = [] if full is None else [
-                c for c in full.columns if c not in _META_COLS
-            ]
-        else:
-            stored = known
-        if known is None or not set(batch_data) <= set(stored):
+        incoming = T.StructType([f for f in batch.schema if f.name not in _META_COLS])
+        stored = self.stored_schema()
+        schema = evolve_struct(stored, incoming)  # raises before any write
+        if self._seeded or schema != stored:
             # the widened sidecar is saved BEFORE the data it describes:
             # a crash between the two leaves an extra sidecar column,
-            # which the fill below finds nothing for — never stored data
-            # that a later narrow batch would not know to keep
-            self._save_stored_cols([*stored, *batch_data])
+            # which reads NULL — never stored data that a later narrow
+            # batch would not know to keep
+            self._save_stored_cols(schema)
+        given = {f.name.lower(): f.name for f in incoming.fields}
+        # the batch's columns under their stored names and types
         frame = batch.select(
-            *[F.col(c) for c in batch_data],
+            *[
+                F.col(given[f.name.lower()]).cast(f.dataType).alias(f.name)
+                for f in schema.fields
+                if f.name.lower() in given
+            ],
             F.col(SEQUENCE_COL).alias(SEQ_STATE_COL),
             (F.col(OPERATION_COL) == OP_DELETE).alias(DELETED_COL),
             self._bucket_expr().alias(BUCKET_COL),
         )
-        absent = [c for c in stored if c not in batch_data]
+        absent = [f for f in schema.fields if f.name.lower() not in given]
         if absent:
             frame = self._fill_absent(frame, absent)
         if not self.merge_on_read:
@@ -405,7 +405,7 @@ class ParquetMergeTable:
         # threshold
         self._l0.maybe_sweep(self.compact)
 
-    def _fill_absent(self, frame: DataFrame, absent: list[str]) -> DataFrame:
+    def _fill_absent(self, frame: DataFrame, absent: list[T.StructField]) -> DataFrame:
         """Column-absent-keeps-target: a stored column absent from the
         batch SCHEMA takes the key's current value — the producer said
         nothing about that column (an older producer, or a table whose
@@ -419,24 +419,26 @@ class ParquetMergeTable:
         the filled row, so the tie-break compares rows AS STORED.
 
         One bucket-pruned left join against the touched buckets'
-        state. A stored column that no touched bucket holds has no
-        value to keep and stays absent from the frame."""
+        state; with no state there, every absent column is NULL."""
         touched = [r[0] for r in frame.select(BUCKET_COL).distinct().collect()]
         state = self._read_state(touched) if touched else None
-        fill = [] if state is None else [c for c in absent if c in state.columns]
-        if not fill:
-            return frame
+        if state is None:
+            return frame.select(
+                "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in absent]
+            )
         cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in self.keys]
         joined = frame.alias("b").join(
-            state.select(*self.keys, *fill).alias("t"), cond, "left"
+            state.select(*self.keys, *[f.name for f in absent]).alias("t"),
+            cond,
+            "left",
         )
         return joined.select(
             *[F.col(f"b.{c}") for c in frame.columns],
             *[
                 F.when(F.col(f"b.{DELETED_COL}"), F.lit(None))
-                .otherwise(F.col(f"t.{c}"))
-                .alias(c)
-                for c in fill
+                .otherwise(F.col(f"t.{f.name}"))
+                .alias(f.name)
+                for f in absent
             ],
         )
 
@@ -460,20 +462,14 @@ class ParquetMergeTable:
             if not touched:
                 return
             base = self._read_files(touched)
-            raw = (
-                delta
-                if base is None
-                else base.unionByName(delta, allowMissingColumns=True)
+            resolved = self._resolve(
+                delta if base is None else base.unionByName(delta)
             )
-            resolved = self._resolve(raw)
-            if not self.tombstone_deletes and DELETED_COL in resolved.columns:
+            if not self.tombstone_deletes:
                 # drop the marker column too, not just the marker rows:
                 # bucket dirs must stay column-identical whichever
-                # writer folded them, or _read_state consumers would see
-                # _deleted=false appear and vanish
-                resolved = resolved.filter(
-                    ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-                ).drop(DELETED_COL)
+                # writer folded them
+                resolved = _live(resolved)
             # an empty target has no stale bucket directory to delete
             self._write(resolved, touched=None if base is None else touched)
         finally:
@@ -492,7 +488,7 @@ class ParquetMergeTable:
         l0_files = self._l0.files()
         if not l0_files:
             return
-        self._fold(self.spark.read.option("mergeSchema", "true").parquet(*l0_files))
+        self._fold(self._reader().parquet(*l0_files))
         self._l0.delete_files(l0_files)
 
     def purge_keys(self, keys_df: DataFrame) -> int:

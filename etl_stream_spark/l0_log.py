@@ -133,17 +133,10 @@ class L0AppendLog:
     appending, the sweep gate, and file deletion — the machinery that
     must never diverge between stores."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        sweep_threshold: int,
-        merge_schema: bool = False,
-    ) -> None:
+    def __init__(self, spark: SparkSession, path: str, sweep_threshold: int) -> None:
         self.spark = spark
         self.path = path.rstrip("/")
         self.sweep_threshold = sweep_threshold
-        self.merge_schema = merge_schema
         #: None until the first sweep check seeds it from the listing —
         #: the restart-resume behavior documented in the module header
         self._appends_since_sweep: int | None = None
@@ -171,10 +164,7 @@ class L0AppendLog:
         files = self.files()
         if not files:
             return None
-        reader = self.spark.read
-        if self.merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*files)
+        return self.spark.read.parquet(*files)
 
     def maybe_sweep(self, drain: Callable[[], None]) -> None:
         """Counter-gated sweep: once ``sweep_threshold`` appends have

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_stream_spark.cdc import (
     OP_DELETE,
@@ -666,6 +667,134 @@ class TestSchemaSidecar:
         t.merge(make_batch(spark, [ev(1, "b", 7, OP_UPDATE, 3)]))
         t.merge(narrow("c", 4))
         assert state_dict(t) == {1: ("c", 7)}
+
+
+class TestTypedSchema:
+    """The sidecar holds the typed schema, and every read of the table
+    passes it: a batch whose column type differs from the stored one is
+    cast up, widens the table, or is refused before it writes — never
+    stored as a second type that later reads cannot merge."""
+
+    def _open(self, spark, tmp_path, mor, name="t"):
+        return ParquetMergeTable(
+            spark,
+            str(tmp_path / name),
+            keys=["id"],
+            num_buckets=4,
+            merge_on_read=mor,
+            compact_threshold=50,
+        )
+
+    def _fresh_key(self, spark, table, key):
+        """A key in a different bucket from ``key``: its batch reads no
+        stored file, so only the sidecar knows the stored type."""
+        from etl_stream_spark.cdc.merge import bucket_expr_for
+
+        rows = spark.range(64).select(
+            "id", bucket_expr_for(["id"], table.num_buckets).alias("b")
+        ).collect()
+        home = next(r["b"] for r in rows if r["id"] == key)
+        return next(r["id"] for r in rows if r["b"] != home)
+
+    def _batch(self, spark, key, v, vtype, seq_idx):
+        return spark.createDataFrame(
+            [(key, v, OP_INSERT, make_sequence(1_700_000_000_000_000, seq_idx))],
+            f"id long, v {vtype}, operation string, sequence string",
+        )
+
+    @pytest.mark.parametrize("mor", [False, True], ids=["eager", "mor"])
+    def test_changed_type_is_refused_before_any_write(self, spark, tmp_path, mor):
+        t = self._open(spark, tmp_path, mor)
+        t.merge(self._batch(spark, 1, 5, "int", 0))
+        files = sorted(str(p) for p in (tmp_path / "t").rglob("*.parquet"))
+        key = self._fresh_key(spark, t, 1)
+        with pytest.raises(ValueError, match="'v'"):
+            t.merge(self._batch(spark, key, "x", "string", 1))
+        assert sorted(str(p) for p in (tmp_path / "t").rglob("*.parquet")) == files
+        # the table, and a restarted writer, still read it
+        for table in (t, self._open(spark, tmp_path, mor)):
+            out = table.read()
+            assert out.schema["v"].dataType == T.IntegerType()
+            assert [tuple(r) for r in out.collect()] == [(1, 5)]
+
+    @pytest.mark.parametrize("mor", [False, True], ids=["eager", "mor"])
+    def test_wider_type_widens_the_table(self, spark, tmp_path, mor):
+        t = self._open(spark, tmp_path, mor)
+        t.merge(self._batch(spark, 1, 5, "int", 0))
+        key = self._fresh_key(spark, t, 1)
+        t.merge(self._batch(spark, key, 2**40, "bigint", 1))
+        want = {(1, 5), (key, 2**40)}
+        out = t.read()
+        assert out.schema["v"].dataType == T.LongType()
+        assert {tuple(r) for r in out.collect()} == want
+        if mor:
+            t.compact()
+            assert t._l0.files() == []
+            assert {tuple(r) for r in t.read().collect()} == want
+        # a narrower batch after the widening casts up
+        t.merge(self._batch(spark, 1, 6, "int", 2))
+        assert {tuple(r) for r in t.read().collect()} == {(1, 6), (key, 2**40)}
+
+    @pytest.mark.parametrize("mor", [False, True], ids=["eager", "mor"])
+    def test_void_column_stores_a_typed_null(self, spark, tmp_path, mor):
+        t = self._open(spark, tmp_path, mor)
+        t.merge(self._batch(spark, 1, 5, "int", 0))
+        key = self._fresh_key(spark, t, 1)
+        t.merge(
+            self._batch(spark, key, 7, "int", 1)
+            .withColumn("v", F.lit(None))
+            .withColumn("never_stored", F.lit(None))
+        )
+        assert t.stored_schema().fieldNames() == ["id", "v"]
+        assert {tuple(r) for r in t.read().collect()} == {(1, 5), (key, None)}
+        # the files themselves hold the stored type: a read that infers
+        # the schema from their footers agrees with the sidecar
+        path = str(tmp_path / "t" / ("_delta" if mor else ""))
+        inferred = spark.read.option("mergeSchema", "true").parquet(path)
+        assert inferred.schema["v"].dataType == T.IntegerType()
+
+    @pytest.mark.parametrize("mor", [False, True], ids=["eager", "mor"])
+    def test_names_only_sidecar_upgrades_on_first_merge(self, spark, tmp_path, mor):
+        """A sidecar that lists column names only (the format before it
+        held types) is seeded from the files, and the first merge saves
+        the typed schema. Merge-on-read keeps ``qty`` in L0 alone, so
+        the seed must read L0 as well as the bucket layout."""
+        import json
+
+        from etl_stream_spark.l0_log import write_small_text
+
+        t = self._open(spark, tmp_path, mor)
+        t.merge(make_batch(spark, [ev(1, "a", 1, OP_INSERT, 0), ev(2, "b", 2, OP_INSERT, 1)]))
+        sidecar = tmp_path / "t" / "_meta_cols.json"
+        write_small_text(spark, str(sidecar), json.dumps(["id", "name", "qty"]))
+
+        t = self._open(spark, tmp_path, mor)
+        t.merge(
+            spark.createDataFrame(
+                [(2, "b2", OP_UPDATE, make_sequence(1_700_000_000_000_000, 2))],
+                "id long, name string, operation string, sequence string",
+            )
+        )
+        saved = T.StructType.fromJson(json.loads(sidecar.read_text()))
+        assert [(f.name, f.dataType) for f in saved.fields] == [
+            ("id", T.LongType()),
+            ("name", T.StringType()),
+            ("qty", T.LongType()),
+        ]
+        assert state_dict(t) == {1: ("a", 1), 2: ("b2", 2)}
+
+    def test_bucket_state_read_launches_no_job(self, spark, tmp_path):
+        """Building the touched buckets' state is planning only: the
+        read passes the stored schema, so no footer scan runs."""
+        from test_core_path_ledger import _last_job
+
+        t = self._open(spark, tmp_path, mor=False)
+        t.merge(make_batch(spark, [ev(i, "a", i, OP_INSERT, i) for i in range(8)]))
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        j0 = _last_job(spark)
+        state = t._read_state(sorted(t._existing_buckets()))
+        assert _last_job(spark) == j0
+        assert state.count() == 8
 
 
 class TestMorStateConsumers:

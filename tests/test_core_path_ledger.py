@@ -42,13 +42,14 @@ PAYLOAD = T.StructType(
 #: append per table
 MOR_NON_DRAIN_JOBS = 5
 #: the 8th append of each table also folds its L0 into the bucket
-#: layout (8 jobs per table)
-MOR_DRAIN_JOBS = 29
+#: layout (7 jobs per table). The L0 and bucket reads pass the table's
+#: typed schema, so neither runs a footer-scan job.
+MOR_DRAIN_JOBS = 26
 #: two eager tables, each folding its batch into the touched buckets:
 #: the first batch into empty targets (8 jobs per table), later ones
-#: with a bucket read and an emptied-bucket probe (11 jobs per table)
+#: with a bucket read and an emptied-bucket probe (10 jobs per table)
 EAGER_FIRST_JOBS = 16
-EAGER_JOBS = 22
+EAGER_JOBS = 20
 #: source input records per change row, over the whole run: the
 #: decoded batch is read once per table write, and the fold also reads
 #: the touched buckets' state

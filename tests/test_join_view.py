@@ -247,3 +247,33 @@ def test_narrow_dim_batches_and_null_fk(spark, tmp_path):
     dim.merge(nulldim)
     view.on_dim_batch(nulldim)
     assert view_rows(view) == {1: (1, 101, "alice"), 2: (None, 202, None)}
+
+
+#: Spark jobs of a fact refresh whose keys' fact buckets are all gone:
+#: the bucket-id collect, then the view's fold of the PK deletes (delta
+#: bucket collect, emptied-bucket probe, write). The deletes carry every
+#: stored view column as NULL, so no fill of absent columns reads the
+#: view first.
+FACT_GONE_REFRESH_JOBS = 8
+
+
+def test_fact_gone_refresh_sends_full_width_deletes(spark, tmp_path):
+    from test_core_path_ledger import _last_job
+
+    fact, dim, view = build(spark, str(tmp_path))
+    db = spark.createDataFrame([(1, "alice", OP_INSERT, seq(1))], DIM_SCHEMA)
+    dim.merge(db)
+    view.on_dim_batch(db)
+    fb = spark.createDataFrame([(1, 1, 101, OP_INSERT, seq(2))], FACT_SCHEMA)
+    fact.merge(fb)
+    view.on_fact_batch(fb)
+    assert view_rows(view) == {1: (1, 101, "alice")}
+
+    gone = spark.createDataFrame([(1, None, None, OP_DELETE, seq(3))], FACT_SCHEMA)
+    fact.merge(gone)
+    assert fact._read_state(buckets=list(range(fact.num_buckets))) is None
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    j0 = _last_job(spark)
+    view.on_fact_batch(gone)
+    assert _last_job(spark) - j0 == FACT_GONE_REFRESH_JOBS
+    assert view_rows(view) == {}

@@ -42,7 +42,6 @@ KEPT_UNREACHED = {
     "etl_stream_spark.schema.type_mapping": "Postgres type mapping",
     "etl_stream_spark.schema.pk_detection": "primary-key heuristic",
     "etl_stream_spark.schema.inference": "value-based type inference",
-    "etl_stream_spark.schema.evolution": "schema drift (new columns)",
     "etl_stream_spark.functions.serialization": "P4/P5 value serialization",
 }
 
