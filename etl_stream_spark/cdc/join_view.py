@@ -120,20 +120,8 @@ class IncrementalJoinView:
 
     # -- the delta refresh -------------------------------------------------
 
-    def _buckets_of(self, df: DataFrame, cols: Sequence[str], n: int) -> list[int]:
-        # the merge engine's OWN bucket function — a drifted reimpl
-        # would silently prune the wrong buckets
-        from etl_stream_spark.cdc.merge import bucket_expr_for
-
-        return [
-            r[0]
-            for r in df.select(bucket_expr_for(cols, n).alias("b"))
-            .distinct()
-            .collect()
-        ]
-
     def _refresh(self, keys_df: DataFrame) -> None:
-        fact_buckets = self._buckets_of(keys_df, self.fact.keys, self.fact.num_buckets)
+        fact_buckets = self.fact.buckets_of(keys_df)
         if not fact_buckets:
             return
         fact_state = self.fact._read_state(buckets=fact_buckets)
@@ -158,7 +146,7 @@ class IncrementalJoinView:
         rows = fact_state.drop(BUCKET_COL, SEQ_STATE_COL).join(
             keys_df, self.fact.keys, "left_semi"
         )
-        dim_buckets = self._buckets_of(rows, self.fk_cols, self.dim.num_buckets)
+        dim_buckets = self.dim.buckets_of(rows, self.fk_cols)
         dim_state = self.dim._read_state(dim_buckets) if dim_buckets else None
         joined = rows
         if dim_state is not None:

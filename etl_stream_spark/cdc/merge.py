@@ -41,7 +41,7 @@ from __future__ import annotations
 import json
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -87,14 +87,13 @@ def _live(df: DataFrame) -> DataFrame:
     return df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
 
 
-def bucket_expr_for(cols: Sequence[str], num_buckets: int):
+def bucket_expr_for(cols: Sequence[str | Column], num_buckets: int):
     """THE bucket function of every merge-table layout:
-    ``pmod(xxhash64(cols), n)``. Shared so bucket-pruned readers
-    (join-view refreshes, SCD2 probes) can never drift from the writer
-    — drift would silently prune the wrong buckets."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(num_buckets)).cast(
-        "int"
-    )
+    ``pmod(xxhash64(cols), n)``. A table applies it to its keys as it
+    stores them (:meth:`ParquetMergeTable._bucket_expr`), for its writer
+    and its bucket-pruned readers alike — drift would silently prune
+    the wrong buckets."""
+    return F.pmod(F.xxhash64(*cols), F.lit(num_buckets)).cast("int")
 
 
 def stored_shape_tie_break(
@@ -186,8 +185,28 @@ class ParquetMergeTable:
 
     # -- storage helpers ---------------------------------------------------
 
-    def _bucket_expr(self):
-        return bucket_expr_for(self.keys, self.num_buckets)
+    def _bucket_expr(self, cols: Sequence[str] | None = None):
+        """The bucket of the key columns (``cols`` names them, in key
+        order, in a frame that spells them otherwise), hashed as the
+        table stores the keys: xxhash64 hashes an int and a bigint
+        differently, so a key sent as another type would otherwise land
+        in a second bucket."""
+        types = {f.name.lower(): f.dataType for f in self.stored_schema()}
+        return bucket_expr_for(
+            [
+                F.col(c).cast(types[k.lower()]) if k.lower() in types else F.col(c)
+                for c, k in zip(cols or self.keys, self.keys)
+            ],
+            self.num_buckets,
+        )
+
+    def buckets_of(self, df: DataFrame, cols: Sequence[str] | None = None) -> list[int]:
+        """The distinct buckets of ``df``'s keys (``cols`` as in
+        :meth:`_bucket_expr`): the one bounded driver collect, at most
+        ``num_buckets`` ints, of every bucket-pruned reader — a drifted
+        copy of the bucket function would silently prune the wrong
+        buckets."""
+        return [r[0] for r in df.select(self._bucket_expr(cols)).distinct().collect()]
 
     def exists(self) -> bool:
         fs, p = _hadoop_fs(self.spark, self.path)
@@ -354,7 +373,8 @@ class ParquetMergeTable:
 
         Both engines run the same steps: widen the stored schema by the
         batch's (``evolve_struct``, which raises on a type change the
-        stored files cannot take), project the raw batch to the stored
+        stored files cannot take; a key column keeps its type, since its
+        rows are bucketed by its hash), project the raw batch to the stored
         shape (data cols + ``_seq`` + ``_deleted`` marker + bucket),
         fill the stored columns the batch schema lacks from the current
         state, then either append the frame to L0 (``merge_on_read``) or :meth:`_fold` it into the touched
@@ -371,6 +391,14 @@ class ParquetMergeTable:
         incoming = T.StructType([f for f in batch.schema if f.name not in _META_COLS])
         stored = self.stored_schema()
         schema = evolve_struct(stored, incoming)  # raises before any write
+        keys = {k.lower() for k in self.keys}
+        for was, now in zip(stored.fields, schema.fields):
+            if was.name.lower() in keys and was.dataType != now.dataType:
+                # the stored rows are bucketed by the hash of the old type
+                raise ValueError(
+                    f"key column {was.name!r} is stored as "
+                    f"{was.dataType.simpleString()}, not {now.dataType.simpleString()}"
+                )
         if self._seeded or schema != stored:
             # the widened sidecar is saved BEFORE the data it describes:
             # a crash between the two leaves an extra sidecar column,
@@ -387,8 +415,7 @@ class ParquetMergeTable:
             ],
             F.col(SEQUENCE_COL).alias(SEQ_STATE_COL),
             (F.col(OPERATION_COL) == OP_DELETE).alias(DELETED_COL),
-            self._bucket_expr().alias(BUCKET_COL),
-        )
+        ).withColumn(BUCKET_COL, self._bucket_expr())
         absent = [f for f in schema.fields if f.name.lower() not in given]
         if absent:
             frame = self._fill_absent(frame, absent)

@@ -119,34 +119,45 @@ class IncrementalRollup:
     def refresh_groups(self, touched_rows: list[tuple]) -> None:
         if not touched_rows:
             return
-        silver = self._silver_df()
-        # silver fully emptied: every touched group vanished — gold must
-        # still receive the DELETEs or it would serve stale aggregates
-        typed = silver if silver is not None else self.gold._read_state()
-        if typed is None:
-            return  # nothing on either side
+        schema_src = self._silver_df()
+        if schema_src is None:
+            # silver fully emptied: every touched group vanished — gold
+            # must receive the DELETEs or it would serve stale aggregates
+            gold_state = self.gold._read_state()
+            if gold_state is None:
+                return  # nothing on either side
+            touched = self.spark.createDataFrame(
+                touched_rows, gold_state.select(*self.group_cols).schema
+            )
+            self._refresh_seq += 1
+            seq = F.lit(f"{self._refresh_seq:020d}")
+            deletes = touched.withColumn(OPERATION_COL, F.lit(OP_DELETE)).withColumn(
+                SEQUENCE_COL, seq
+            )
+            for name in self.aggs:
+                deletes = deletes.withColumn(name, F.lit(None))
+            self.gold.merge(deletes)
+            return
         touched = self.spark.createDataFrame(
-            touched_rows, typed.select(*self.group_cols).schema
+            touched_rows, schema_src.select(*self.group_cols).schema
         )
-        changes = touched.select(
-            "*", *[F.lit(None).alias(name) for name in self.aggs]
-        ).withColumn(OPERATION_COL, F.lit(OP_DELETE))
-        if silver is not None:
-            recomputed = (
-                silver.join(F.broadcast(touched), self.group_cols, "inner")
-                .groupBy(*self.group_cols)
-                .agg(*[build().alias(name) for name, build in self.aggs.items()])
-            )
-            # groups with no surviving silver rows → DELETE from gold
-            vanished = changes.join(
-                recomputed.select(*self.group_cols), self.group_cols, "left_anti"
-            )
-            changes = recomputed.withColumn(
-                OPERATION_COL, F.lit(OP_UPDATE)
-            ).unionByName(vanished)
+        silver_rows = schema_src.join(F.broadcast(touched), self.group_cols, "inner")
+        recomputed = silver_rows.groupBy(*self.group_cols).agg(
+            *[build().alias(name) for name, build in self.aggs.items()]
+        )
+        # groups with no surviving silver rows → DELETE from gold
+        vanished = touched.join(recomputed.select(*self.group_cols), self.group_cols, "left_anti")
         self._refresh_seq += 1
         seq = F.lit(f"{self._refresh_seq:020d}")
-        self.gold.merge(changes.withColumn(SEQUENCE_COL, seq))
+        upserts = recomputed.withColumn(OPERATION_COL, F.lit(OP_UPDATE)).withColumn(
+            SEQUENCE_COL, seq
+        )
+        deletes = vanished.withColumn(OPERATION_COL, F.lit(OP_DELETE)).withColumn(
+            SEQUENCE_COL, seq
+        )
+        for name in self.aggs:
+            deletes = deletes.withColumn(name, F.lit(None))
+        self.gold.merge(upserts.unionByName(deletes, allowMissingColumns=False))
 
     def read(self) -> DataFrame:
         return self.gold.read()

@@ -284,16 +284,11 @@ class Scd2Table:
         ]
 
         # Prior open versions for the batch's keys: prune the open-zone
-        # scan to the batch's buckets via the merge table's own bucket
-        # expression (the collect is bucket IDs — bounded, not data).
+        # scan to the batch's buckets (the collect is bucket IDs —
+        # bounded, not data).
         from etl_stream_spark.cdc.merge import BUCKET_COL
 
-        touched = [
-            r[0]
-            for r in batch.select(self.open._bucket_expr().alias(BUCKET_COL))
-            .distinct()
-            .collect()
-        ]
+        touched = self.open.buckets_of(batch)
         state = self.open._read_state(buckets=touched) if touched else None
         if state is not None:
             # The stored open rows close with their OWN payload columns —

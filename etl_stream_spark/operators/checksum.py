@@ -152,12 +152,7 @@ class ChecksumStore:
         """Refresh the buckets ``batch`` touched. Call after
         ``table.merge(batch)``. The collect is bounded: distinct bucket
         ids of the batch, ≤ ``table.num_buckets`` ints."""
-        touched = [
-            r.b
-            for r in batch.select(self.table._bucket_expr().alias("b"))
-            .distinct()
-            .collect()
-        ]
+        touched = self.table.buckets_of(batch)
         fresh = self._fresh(touched)
         stored = self._read()
         if stored is not None:

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_stream_spark.cdc.envelope import OPERATION_COL, SEQUENCE_COL
-from etl_stream_spark.cdc.merge import BUCKET_COL, ParquetMergeTable
+from etl_stream_spark.cdc.merge import ParquetMergeTable
 from etl_stream_spark.l0_log import read_small_text, write_small_text
 
 FP_COL = "fp"
@@ -120,12 +120,7 @@ class FingerprintStore:
             return batch.drop(FP_COL)
         # prune the store scan to the batch's buckets (bounded collect:
         # at most num_buckets ints)
-        bucket = self.table._bucket_expr()
-        touched = [
-            r[0]
-            for r in batch.select(bucket.alias(BUCKET_COL)).distinct().collect()
-        ]
-        state = self.table._read_state(buckets=touched)
+        state = self.table._read_state(buckets=self.table.buckets_of(batch))
         if state is None:
             # table root exists but none of the batch's buckets are
             # materialized (e.g. purge() emptied them) — all novel
@@ -266,16 +261,9 @@ class LshBandStore:
                 .filter(F.col("_min_id") < F.col(id_col))
                 .select(id_col)
             )
-            bucket = self.table._bucket_expr()
             store_hit = None
             if self.table.exists():
-                touched = [
-                    r[0]
-                    for r in bands.select(bucket.alias(BUCKET_COL))
-                    .distinct()
-                    .collect()
-                ]
-                state = self.table._read_state(buckets=touched)
+                state = self.table._read_state(buckets=self.table.buckets_of(bands))
                 if state is not None:
                     store_hit = bands.join(
                         state.select(BAND_ID_COL, BAND_KEY_COL),

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -669,6 +671,34 @@ class TestSchemaSidecar:
         assert state_dict(t) == {1: ("c", 7)}
 
 
+#: every (narrow, value, wide, value) type pair the drift rule widens
+#: (``schema.evolution._widens``); decimals at each parquet physical
+#: width (int32 up to precision 9, int64 up to 18, binary above)
+WIDENINGS = [
+    ("tinyint", 5, "smallint", 300),
+    ("tinyint", 5, "int", 70_000),
+    ("tinyint", 5, "bigint", 2**40),
+    ("smallint", 300, "int", 70_000),
+    ("smallint", 300, "bigint", 2**40),
+    ("int", 70_000, "bigint", 2**40),
+    ("tinyint", 5, "double", 2.5),
+    ("smallint", 300, "double", 2.5),
+    ("int", 70_000, "double", 2.5),
+    ("float", 1.5, "double", 0.1),
+    ("decimal(5,2)", Decimal("1.25"), "decimal(7,2)", Decimal("12345.67")),
+    ("decimal(5,2)", Decimal("1.25"), "decimal(7,3)", Decimal("1234.125")),
+    ("decimal(9,2)", Decimal("1234567.89"), "decimal(12,2)", Decimal("1234567890.12")),
+    ("decimal(9,2)", Decimal("1234567.89"), "decimal(12,4)", Decimal("12345678.1234")),
+    ("decimal(5,2)", Decimal("1.25"), "decimal(20,2)", Decimal("10" * 9)),
+    (
+        "decimal(12,2)",
+        Decimal("1234567890.12"),
+        "decimal(20,4)",
+        Decimal("1234567890123456.1234"),
+    ),
+]
+
+
 class TestTypedSchema:
     """The sidecar holds the typed schema, and every read of the table
     passes it: a batch whose column type differs from the stored one is
@@ -717,23 +747,141 @@ class TestTypedSchema:
             assert out.schema["v"].dataType == T.IntegerType()
             assert [tuple(r) for r in out.collect()] == [(1, 5)]
 
+    def test_widenings_name_every_accepted_pair(self, spark):
+        """:data:`WIDENINGS` lists every non-decimal pair the drift rule
+        widens, so the test below reads each of them back."""
+        from etl_stream_spark.schema.evolution import _widens
+
+        atomic = [
+            "tinyint", "smallint", "int", "bigint", "float", "double",
+            "string", "boolean", "date", "timestamp",
+        ]
+        accepted = {
+            (a, b)
+            for a in atomic
+            for b in atomic
+            if _widens(T._parse_datatype_string(a), T._parse_datatype_string(b))
+        }
+        listed = {(a, b) for a, _, b, _ in WIDENINGS if not a.startswith("decimal")}
+        assert accepted == listed
+
+    @pytest.mark.parametrize("wide_first", [False, True], ids=["widen", "cast_up"])
     @pytest.mark.parametrize("mor", [False, True], ids=["eager", "mor"])
-    def test_wider_type_widens_the_table(self, spark, tmp_path, mor):
+    def test_wider_type_widens_the_table(self, spark, tmp_path, mor, wide_first):
+        """One column per :data:`WIDENINGS` pair. ``widen``: the narrow
+        type is stored first and the wide batch widens the table, whose
+        old files then read as the wide type. ``cast_up``: the wide type
+        is stored first and the narrow batch is cast up to it."""
+        cols = [f"c{i}" for i in range(len(WIDENINGS))]
+        narrow = [(narrow_t, narrow_v) for narrow_t, narrow_v, _, _ in WIDENINGS]
+        wide = [(wide_t, wide_v) for _, _, wide_t, wide_v in WIDENINGS]
+
+        def batch(key, typed, seq_idx):
+            shape = ", ".join(f"{c} {t}" for c, (t, _) in zip(cols, typed))
+            return spark.createDataFrame(
+                [
+                    (
+                        key,
+                        *[v for _, v in typed],
+                        OP_INSERT,
+                        make_sequence(1_700_000_000_000_000, seq_idx),
+                    )
+                ],
+                f"id long, {shape}, operation string, sequence string",
+            )
+
+        def check(table, want):
+            out = table.read()
+            for c, (wide_t, _) in zip(cols, wide):
+                assert out.schema[c].dataType == T._parse_datatype_string(wide_t), c
+            got = {r["id"]: r for r in out.collect()}
+            assert set(got) == set(want)
+            for key, typed in want.items():
+                for c, (_, v) in zip(cols, typed):
+                    assert got[key][c] == v, (c, key)
+
         t = self._open(spark, tmp_path, mor)
-        t.merge(self._batch(spark, 1, 5, "int", 0))
+        first, second = (wide, narrow) if wide_first else (narrow, wide)
+        t.merge(batch(1, first, 0))
         key = self._fresh_key(spark, t, 1)
-        t.merge(self._batch(spark, key, 2**40, "bigint", 1))
-        want = {(1, 5), (key, 2**40)}
-        out = t.read()
-        assert out.schema["v"].dataType == T.LongType()
-        assert {tuple(r) for r in out.collect()} == want
+        t.merge(batch(key, second, 1))
+        want = {1: first, key: second}
+        check(t, want)
         if mor:
             t.compact()
             assert t._l0.files() == []
-            assert {tuple(r) for r in t.read().collect()} == want
+            check(t, want)
         # a narrower batch after the widening casts up
-        t.merge(self._batch(spark, 1, 6, "int", 2))
-        assert {tuple(r) for r in t.read().collect()} == {(1, 6), (key, 2**40)}
+        t.merge(batch(1, narrow, 2))
+        check(t, {**want, 1: narrow})
+
+    @pytest.mark.parametrize("mor", [False, True], ids=["eager", "mor"])
+    def test_narrower_key_buckets_as_stored(self, spark, tmp_path, mor):
+        """An int key over a stored bigint key is cast up BEFORE it is
+        hashed: xxhash64 hashes the two types differently, and a key in
+        a second bucket would read twice and escape updates, deletes
+        and erasure."""
+        from etl_stream_spark.cdc.merge import bucket_expr_for
+
+        t = self._open(spark, tmp_path, mor)
+
+        def bucket(k, dtype):
+            col = F.lit(k).cast(dtype)
+            return spark.range(1).select(bucket_expr_for([col], 4)).first()[0]
+
+        # keys whose int hash lands in another bucket than their bigint
+        # hash; each goes alone in its batch, so the batch touches only
+        # the bucket its key hashes to
+        upd, dele, gone = [k for k in range(16) if bucket(k, "int") != bucket(k, "bigint")][:3]
+
+        def batch(rows, id_type):
+            return spark.createDataFrame(
+                [
+                    (k, v, op, make_sequence(1_700_000_000_000_000, seq_idx))
+                    for k, v, op, seq_idx in rows
+                ],
+                f"id {id_type}, v int, operation string, sequence string",
+            )
+
+        t.merge(batch([(k, k, OP_INSERT, k) for k in range(16)], "bigint"))
+        if mor:
+            t.compact()  # the next drain then touches the int buckets only
+        t.merge(batch([(upd, 100, OP_UPDATE, 20)], "int"))
+        t.merge(batch([(dele, None, OP_DELETE, 21)], "int"))
+        want = sorted(
+            (k, 100 if k == upd else k) for k in range(16) if k != dele
+        )
+        assert sorted(tuple(r) for r in t.read().collect()) == want
+        if mor:
+            t.compact()
+            assert sorted(tuple(r) for r in t.read().collect()) == want
+        assert t.stored_schema()["id"].dataType == T.LongType()
+        assert t.purge_keys(spark.createDataFrame([(gone,)], "id int")) == 1
+        want = [r for r in want if r[0] != gone]
+        assert sorted(tuple(r) for r in t.read().collect()) == want
+
+    @pytest.mark.parametrize("mor", [False, True], ids=["eager", "mor"])
+    def test_wider_key_is_refused_before_any_write(self, spark, tmp_path, mor):
+        """A key column never widens: its stored rows are bucketed by
+        the hash of the stored type."""
+        t = self._open(spark, tmp_path, mor)
+        t.merge(
+            spark.createDataFrame(
+                [(1, 5, OP_INSERT, make_sequence(1_700_000_000_000_000, 0))],
+                "id int, v int, operation string, sequence string",
+            )
+        )
+        files = sorted(str(p) for p in (tmp_path / "t").rglob("*.parquet"))
+        with pytest.raises(ValueError, match="'id'"):
+            t.merge(
+                spark.createDataFrame(
+                    [(1, 6, OP_UPDATE, make_sequence(1_700_000_000_000_000, 1))],
+                    "id long, v int, operation string, sequence string",
+                )
+            )
+        assert sorted(str(p) for p in (tmp_path / "t").rglob("*.parquet")) == files
+        assert t.stored_schema()["id"].dataType == T.IntegerType()
+        assert [tuple(r) for r in t.read().collect()] == [(1, 5)]
 
     @pytest.mark.parametrize("mor", [False, True], ids=["eager", "mor"])
     def test_void_column_stores_a_typed_null(self, spark, tmp_path, mor):
@@ -786,14 +934,12 @@ class TestTypedSchema:
     def test_bucket_state_read_launches_no_job(self, spark, tmp_path):
         """Building the touched buckets' state is planning only: the
         read passes the stored schema, so no footer scan runs."""
-        from test_core_path_ledger import _last_job
+        from test_core_path_ledger import jobs_of
 
         t = self._open(spark, tmp_path, mor=False)
         t.merge(make_batch(spark, [ev(i, "a", i, OP_INSERT, i) for i in range(8)]))
-        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-        j0 = _last_job(spark)
-        state = t._read_state(sorted(t._existing_buckets()))
-        assert _last_job(spark) == j0
+        state, jobs = jobs_of(spark, lambda: t._read_state(sorted(t._existing_buckets())))
+        assert jobs == 0
         assert state.count() == 8
 
 

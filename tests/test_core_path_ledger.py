@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import random
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -61,6 +62,22 @@ def _last_job(spark) -> int:
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+def jobs_of(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran. The call runs in a
+    job group of its own, so jobs that other threads run meanwhile (a
+    stream another test left running) are not counted; jobs ``fn`` runs
+    on threads of its own are not counted either."""
+    sc = spark.sparkContext
+    group = f"jobs_of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _input_records(spark, first: int, last: int) -> int:

@@ -258,7 +258,7 @@ FACT_GONE_REFRESH_JOBS = 8
 
 
 def test_fact_gone_refresh_sends_full_width_deletes(spark, tmp_path):
-    from test_core_path_ledger import _last_job
+    from test_core_path_ledger import jobs_of
 
     fact, dim, view = build(spark, str(tmp_path))
     db = spark.createDataFrame([(1, "alice", OP_INSERT, seq(1))], DIM_SCHEMA)
@@ -272,8 +272,6 @@ def test_fact_gone_refresh_sends_full_width_deletes(spark, tmp_path):
     gone = spark.createDataFrame([(1, None, None, OP_DELETE, seq(3))], FACT_SCHEMA)
     fact.merge(gone)
     assert fact._read_state(buckets=list(range(fact.num_buckets))) is None
-    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-    j0 = _last_job(spark)
-    view.on_fact_batch(gone)
-    assert _last_job(spark) - j0 == FACT_GONE_REFRESH_JOBS
+    _, jobs = jobs_of(spark, lambda: view.on_fact_batch(gone))
+    assert jobs == FACT_GONE_REFRESH_JOBS
     assert view_rows(view) == {}
