@@ -51,33 +51,24 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors.exceptions.captured import AnalysisException
 
-from etl_stream_spark.l0_log import _hadoop_fs
+from etl_stream_spark.l0_log import ParquetLog
 
 
-class ErasureList:
-    """Persisted erased-key set for one table: a parquet directory of
-    key tuples, append-only (re-adding a key is harmless — suppression
-    reads distinct)."""
+class ErasureList(ParquetLog):
+    """Persisted erased-key set for one table: a log of key tuples
+    (re-adding a key is harmless — suppression reads distinct)."""
 
     def __init__(self, spark: SparkSession, path: str, keys: Sequence[str]) -> None:
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.keys = list(keys)
 
-    def exists(self) -> bool:
-        fs, p = _hadoop_fs(self.spark, self.path)
-        return fs.exists(p)
-
     def add(self, keys_df: DataFrame) -> None:
-        keys_df.select(*self.keys).distinct().write.mode("append").parquet(self.path)
+        self.append(keys_df.select(*self.keys).distinct())
 
     def read(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.path).select(*self.keys).distinct()
-        except AnalysisException:
-            return None
+        erased = super().read()
+        return None if erased is None else erased.select(*self.keys).distinct()
 
     def suppress(self, df: DataFrame) -> DataFrame:
         """Anti-join a batch against the erased keys.
@@ -94,31 +85,11 @@ class ErasureList:
 def purge_parquet_dir(
     spark: SparkSession, path: str, keys_df: DataFrame, keys: Sequence[str]
 ) -> int:
-    """Anti-join rewrite of a plain (non-bucketed) parquet directory —
-    the quarantine / DLQ / landing shape. Delegates to the shared
-    ``replace_parquet_files`` (concurrent-append-safe snapshot
-    protocol, partition-layout preserving). A missing or empty
-    directory is a no-op. Returns rows removed (audit figure)."""
-    from etl_stream_spark.plans.compaction import replace_parquet_files
-
-    try:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-    except AnalysisException:
-        return 0
-    snapshot = list(df.inputFiles())
-    if not snapshot:
-        return 0
-    purge = keys_df.select(*keys).distinct()
-    doomed = df.join(purge, on=list(keys), how="left_semi").count()
-    if doomed == 0:
-        return 0
-    replace_parquet_files(
-        spark,
-        path,
-        snapshot,
-        lambda sub: sub.join(purge, on=list(keys), how="left_anti"),
-    )
-    return doomed
+    """Remove the rows of the given key tuples from an append-only
+    parquet directory — the quarantine / DLQ / landing shape — through
+    :meth:`ParquetLog.delete_rows`. A missing or empty directory is a
+    no-op. Returns rows removed (audit figure)."""
+    return ParquetLog(spark, path).delete_rows(keys_df.select(*keys).distinct())
 
 
 def erasure_list_for(applier, name: str) -> ErasureList:
@@ -187,12 +158,7 @@ def forget_keys(
         "requested_keys": keys_df.count(),
         "state_rows": target.purge_keys(keys_df),
         "history_rows": 0,
-        "quarantine_rows": purge_parquet_dir(
-            applier.spark,
-            f"{applier.base_path}/_quarantine/{name}",
-            keys_df,
-            target.keys,
-        ),
+        "quarantine_rows": applier.quarantine(name).delete_rows(keys_df),
         "extra_path_rows": 0,
     }
     history = applier.histories.get(name)
@@ -208,7 +174,7 @@ def forget_keys(
         if name in (fact_name, dim_name):
             view.view.truncate()
             view.refresh_full()
-    (
+    ParquetLog(applier.spark, f"{applier.base_path}/_erasure_audit").append(
         applier.spark.createDataFrame(
             [
                 (
@@ -222,9 +188,6 @@ def forget_keys(
             ],
             "table string, requested_keys long, state_rows long, "
             "history_rows long, quarantine_rows long, extra_path_rows long",
-        )
-        .withColumn("erased_at", F.current_timestamp())
-        .write.mode("append")
-        .parquet(f"{applier.base_path}/_erasure_audit")
+        ).withColumn("erased_at", F.current_timestamp())
     )
     return report

@@ -39,7 +39,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_stream_spark.cdc.envelope import OP_DELETE, OP_INSERT, OPERATION_COL, SEQUENCE_COL
-from etl_stream_spark.cdc.merge import BUCKET_COL, SEQ_STATE_COL, ParquetMergeTable
+from etl_stream_spark.cdc.merge import (
+    BUCKET_COL,
+    SEQ_STATE_COL,
+    ParquetMergeTable,
+    stored_refresh_seq,
+)
 
 
 class IncrementalJoinView:
@@ -64,18 +69,11 @@ class IncrementalJoinView:
         if overlap:
             raise ValueError(f"dim payload collides with fact columns: {overlap}")
         self.view = ParquetMergeTable(spark, path, keys=fact.keys, num_buckets=num_buckets)
-        self._refresh_seq = self._stored_refresh_seq()
+        self._refresh_seq = stored_refresh_seq(self.view)
 
     def _fact_cols_guess(self) -> set[str]:
         stored = {f.name for f in self.fact.stored_schema().fields}
         return stored | set(self.fact.keys) | set(self.fk_cols)
-
-    def _stored_refresh_seq(self) -> int:
-        state = self.view._read_state()
-        if state is None:
-            return 0
-        row = state.agg(F.max(SEQ_STATE_COL).alias("m")).first()
-        return int(row["m"]) if row and row["m"] is not None else 0
 
     def read(self) -> DataFrame:
         return self.view.read()

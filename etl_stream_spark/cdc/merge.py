@@ -638,3 +638,16 @@ class ParquetMergeTable:
                         fs.delete(p, True)
         finally:
             df.unpersist()
+
+
+def stored_refresh_seq(table: ParquetMergeTable) -> int:
+    """The highest ``_seq`` a derived table (a rollup's gold, a join
+    view) stored: its refresh counter resumes there. A counter starting
+    at 0 against an existing table would emit sequences below the stored
+    ones, and the stale guard would discard every refresh until it
+    caught up."""
+    state = table._read_state()
+    if state is None:
+        return 0
+    row = state.agg(F.max(SEQ_STATE_COL).alias("m")).first()
+    return int(row["m"]) if row and row["m"] is not None else 0

@@ -17,20 +17,14 @@ bounded) is ever collected to the driver; row data stays distributed.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors.exceptions.captured import AnalysisException
 
 from etl_stream_spark.cdc.envelope import OP_TRUNCATE, OPERATION_COL, SEQUENCE_COL
 from etl_stream_spark.cdc.merge import ParquetMergeTable
-from etl_stream_spark.l0_log import (
-    _hadoop_fs,
-    _hadoop_path,
-    read_small_text,
-    write_small_text,
-)
+from etl_stream_spark.l0_log import ParquetLog, read_small_text, write_small_text
 from etl_stream_spark.schema.identifiers import validate_identifier
 
 #: the column of a multi-table batch that names each row's table
@@ -164,16 +158,17 @@ class CdcBatchApplier:
     def _set_last_epoch(self, name: str, epoch_id: int) -> None:
         write_small_text(self.spark, self._epoch_path(name), str(int(epoch_id)))
 
+    def quarantine(self, name: str) -> ParquetLog:
+        """The log of rows the expectation gate parked for ``name``."""
+        return ParquetLog(self.spark, f"{self.base_path}/_quarantine/{name}")
+
     def read_quarantine(self, name: str) -> DataFrame | None:
         """Rows parked by the expectation gate for ``name`` (with their
         ``_violations``), or None when nothing is parked. The repair
         loop: fix the rows, drop ``_violations``, re-add the table
         column, and resubmit through :meth:`apply_batch` — the gate
         re-checks them, so an unrepaired row just parks again."""
-        try:
-            return self.spark.read.parquet(f"{self.base_path}/_quarantine/{name}")
-        except AnalysisException:
-            return None
+        return self.quarantine(name).read()
 
     def apply_batch(self, events: DataFrame, epoch_id: int | None = None) -> None:
         # Fused discovery: ONE pass collects both the distinct table list
@@ -233,9 +228,9 @@ class CdcBatchApplier:
                 # observation counts the parked rows inside the write's
                 # own job.
                 parked = Observation()
-                quarantined.observe(parked, F.count(F.lit(1)).alias("rows")).write.mode(
-                    "append"
-                ).parquet(f"{self.base_path}/_quarantine/{name}")
+                self.quarantine(name).append(
+                    quarantined.observe(parked, F.count(F.lit(1)).alias("rows"))
+                )
                 if self.metrics is not None:
                     self.metrics.inc(
                         "cdc_rows_quarantined_total",
@@ -255,7 +250,7 @@ class CdcBatchApplier:
             if history is not None:
                 # history records pre-truncate versions, so it applies
                 # with its own (segment-preserving) truncate handling
-                history.apply_with_truncate_barrier(per_table)
+                history.apply_with_truncate_barrier(per_table, trunc_seqs)
             apply_with_truncate_barrier(
                 self.target(name), per_table, trunc_seqs=trunc_seqs
             )
@@ -314,6 +309,13 @@ class MergeTask:
     next run. Cadence comes from the caller (the reference's Snowflake
     TASK ``SCHEDULE`` ≙ however this is scheduled — a processing-time
     trigger, a cron, or a driver loop).
+
+    A stream-fed landing is at-least-once: an epoch replayed after a
+    crash lands its rows twice. The merge resolves each key by sequence
+    (with the stored-shape tie-break on equal sequences), so a
+    duplicated event picks the same winner as the original, and an event
+    below a merged key's sequence loses; the duplicates cost nothing but
+    the rows.
     """
 
     landing: "LandingTable"
@@ -336,39 +338,20 @@ class MergeTask:
         return max_seq
 
 
-@dataclass
-class LandingTable:
+class LandingTable(ParquetLog):
     """Append-only bronze landing log with CDC metadata columns, the
-    analog of ``LANDING_<T>`` (``etl-snowflake-py/etl_snowflake/ddl.py:280-353``).
+    analog of ``LANDING_<T>`` (``etl-snowflake-py/etl_snowflake/ddl.py:280-353``),
+    appended to in batches or by ``sinks/append.py::start_landing_stream``.
 
     G5 purge: rows at or below a merged watermark sequence can be
     dropped; with checkpointed exactly-once ``foreachBatch`` the landing
     is optional and kept for audit/replay.
     """
 
-    spark: SparkSession
-    path: str
-    partition_cols: tuple[str, ...] = field(default=())
-
-    def append(self, df: DataFrame) -> None:
-        writer = df.write.mode("append")
-        if self.partition_cols:
-            writer = writer.partitionBy(*self.partition_cols)
-        writer.parquet(self.path)
-
-    def exists(self) -> bool:
-        fs, p = _hadoop_fs(self.spark, self.path)
-        return fs.exists(p)
-
     def read(self) -> DataFrame:
-        try:
-            return self.spark.read.option("mergeSchema", "true").parquet(self.path)
-        except AnalysisException:
-            # directory exists but holds no data files (fully purged) —
-            # schema inference fails at PLANNING time only in that case;
-            # real read faults (corrupt footers, storage errors) surface
-            # at execution as different exception types and still raise
-            return self.spark.createDataFrame([], "struct<>")
+        """Every landed row; a frame with no columns once none is left."""
+        df = super().read()
+        return self.spark.createDataFrame([], "struct<>") if df is None else df
 
     def max_sequence(self) -> str:
         """``COALESCE(MAX(sequence), '0')`` watermark snapshot
@@ -378,35 +361,12 @@ class LandingTable:
             return "0"
         return df.agg(F.coalesce(F.max(SEQUENCE_COL), F.lit("0"))).first()[0]
 
-    def purge_upto(self, max_seq: str) -> None:
-        """Drop rows with sequence <= watermark (``task.py:186-189``).
-
-        Concurrent-append safe: the file set is SNAPSHOTTED first, the
-        retained remainder of exactly those files is written in as new
-        files, and only the snapshotted files are deleted — appends that
-        land during the rewrite are never touched (the earlier
-        delete-directory-and-swap form destroyed them). Crash window:
-        before the deletes, retained rows exist twice; the merge's
-        stale-sequence guard makes replaying them a no-op, so recovery
-        is re-running the purge.
-        """
-        snapshot = list(self.read().inputFiles())
-        if not snapshot:
-            return
-        retained = (
-            self.spark.read.option("mergeSchema", "true")
-            .option("basePath", self.path)
-            .parquet(*snapshot)
-            .filter(F.col(SEQUENCE_COL) > max_seq)
-            .persist()  # isEmpty + append must not scan the snapshot twice
-        )
-        try:
-            # write the remainder INTO the landing as a normal append
-            # (keeps the partition layout); empty remainder writes nothing
-            if not retained.isEmpty():
-                self.append(retained)
-        finally:
-            retained.unpersist()
-        fs, _ = _hadoop_fs(self.spark, self.path)
-        for f in snapshot:
-            fs.delete(_hadoop_path(self.spark, f), False)
+    def purge_upto(self, max_seq: str) -> int:
+        """Drop rows with sequence <= watermark (``task.py:186-189``)
+        and return how many went: rewrites only the files holding such
+        rows, and never touches an append landing meanwhile
+        (:meth:`ParquetLog.delete_rows`). A crash before the deletes
+        leaves retained rows twice; the merge's stale-sequence guard
+        makes replaying them a no-op, and a later purge past their
+        sequence removes both copies."""
+        return self.delete_rows(F.col(SEQUENCE_COL) <= max_seq)

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_stream_spark.cdc.envelope import OP_DELETE, OP_UPDATE, OPERATION_COL, SEQUENCE_COL
-from etl_stream_spark.cdc.merge import SEQ_STATE_COL, ParquetMergeTable
+from etl_stream_spark.cdc.merge import SEQ_STATE_COL, ParquetMergeTable, stored_refresh_seq
 
 
 class IncrementalRollup:
@@ -55,19 +55,7 @@ class IncrementalRollup:
         self.gold = ParquetMergeTable(
             spark, gold_path, keys=group_cols, num_buckets=num_buckets
         )
-        # Resume the monotone refresh counter from what the gold table
-        # already persisted: a fresh counter starting at 0 against an
-        # existing gold path would emit sequences below gold's stored
-        # _seq, and the merge's stale guard would silently discard every
-        # refresh until the counter caught up.
-        self._refresh_seq = self._stored_refresh_seq()
-
-    def _stored_refresh_seq(self) -> int:
-        state = self.gold._read_state()
-        if state is None:
-            return 0
-        row = state.agg(F.max(SEQ_STATE_COL).alias("m")).first()
-        return int(row["m"]) if row and row["m"] is not None else 0
+        self._refresh_seq = stored_refresh_seq(self.gold)
 
     def _silver_df(self) -> DataFrame | None:
         """Readable silver state, or None when the table is absent OR

@@ -45,6 +45,7 @@ from etl_stream_spark.cdc.envelope import (
     TIMESTAMP_COL,
 )
 from etl_stream_spark.cdc.merge import SEQ_STATE_COL, ParquetMergeTable
+from etl_stream_spark.l0_log import ParquetLog
 
 VALID_FROM_COL = "valid_from_seq"
 VALID_TO_COL = "valid_to_seq"
@@ -81,22 +82,11 @@ class Scd2Table:
             spark, f"{self.path}/open", keys, num_buckets=num_buckets
         )
         self.closed_path = f"{self.path}/closed"
+        #: batches may add columns over the table's life; a closed file
+        #: written before a column existed reads NULL for it
+        self.closed = ParquetLog(spark, self.closed_path)
 
     # -- reads -------------------------------------------------------------
-
-    def _read_closed(self) -> DataFrame | None:
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        try:
-            # mergeSchema: batches may add columns over the table's life
-            # (schema evolution through the pipeline); files written
-            # before the column existed read as NULL, like the merge
-            # engine's evolution path.
-            return self.spark.read.option("mergeSchema", "true").parquet(
-                self.closed_path
-            )
-        except AnalysisException:
-            return None
 
     def read(self) -> DataFrame:
         """Full history: closed versions ∪ open (current) versions, with
@@ -106,7 +96,7 @@ class Scd2Table:
             cur = None
         else:
             cur = open_df.withColumn(VALID_TO_COL, F.lit(None).cast("string"))
-        closed = self._read_closed()
+        closed = self.closed.read()
         if cur is None and closed is None:
             return self.spark.createDataFrame([], "struct<>")
         if cur is None:
@@ -154,49 +144,17 @@ class Scd2Table:
         except FileNotFoundError:
             return {"files_before": 0, "files_after": 0, "skipped": True}
 
-    def _replace_closed_files(self, files: list[str], keep) -> None:
-        """Rewrite exactly ``files`` in the closed zone via the shared
-        snapshot protocol (``plans/compaction.py::replace_parquet_files``).
-        Callers pass only the files that actually CONTAIN doomed rows,
-        so rewrite amplification is bounded by where the doomed rows
-        live, not by history size — the same cost model as a
-        Delta/Iceberg DELETE, which also rewrites affected files only.
-        At scale, batch erasure/retention requests and fold the rewrite
-        into the scheduled :meth:`compact_closed` cycle."""
-        from etl_stream_spark.plans.compaction import replace_parquet_files
-
-        replace_parquet_files(self.spark, self.closed_path, files, keep)
-
     def purge_keys(self, keys_df: DataFrame) -> int:
         """Compliance erasure: remove EVERY version of the given keys —
         current and historical. The open zone inherits the merge
-        engine's bucket-pruned purge. The closed zone is append-only
-        and not keyed, so one pass over it locates the doomed FILES and
-        counts the doomed rows together (the file list is bounded by
-        the file count, which compaction keeps low) and only those
-        files are rewritten. Returns total versions removed
-        (open + closed) for the proof-of-erasure audit."""
+        engine's bucket-pruned purge; in the append-only closed zone
+        only the files holding the keys are rewritten
+        (:meth:`ParquetLog.delete_rows`), so rewrite amplification is
+        bounded by where the doomed rows live, not by history size — the
+        cost model of a Delta/Iceberg DELETE. Returns total versions
+        removed (open + closed) for the proof-of-erasure audit."""
         removed = self.open.purge_keys(keys_df)
-        closed = self._read_closed()
-        if closed is None:
-            return removed
-        purge = keys_df.select(*self.keys).distinct()
-        summary = (
-            closed.withColumn("_f", F.input_file_name())
-            .join(purge, on=self.keys, how="left_semi")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.collect_set("_f").alias("files"),
-            )
-            .first()
-        )
-        if summary.n == 0:
-            return removed
-        self._replace_closed_files(
-            list(summary.files),
-            lambda df: df.join(purge, on=self.keys, how="left_anti"),
-        )
-        return removed + summary.n
+        return removed + self.closed.delete_rows(keys_df.select(*self.keys).distinct())
 
     def expire_closed_before(self, seq: str) -> None:
         """Retention enforcement: drop closed versions whose validity
@@ -205,19 +163,7 @@ class Scd2Table:
         horizon are unaffected — reads before it lose versions by
         design (that is what a retention horizon means). Only files
         holding expired rows are rewritten."""
-        closed = self._read_closed()
-        if closed is None:
-            return
-        doomed = F.col(VALID_TO_COL) <= F.lit(seq)
-        doomed_files = [
-            r[0]
-            for r in closed.withColumn("_f", F.input_file_name())
-            .filter(doomed)
-            .select("_f")
-            .distinct()
-            .collect()
-        ]
-        self._replace_closed_files(doomed_files, lambda df: df.filter(~doomed))
+        self.closed.delete_rows(F.col(VALID_TO_COL) <= F.lit(seq))
 
     def close_all(self, at_seq: str) -> None:
         """TRUNCATE semantics for a history table: a truncate does not
@@ -227,24 +173,18 @@ class Scd2Table:
         open_df = self.open.read()
         if not open_df.columns:
             return
-        open_df.withColumn(VALID_TO_COL, F.lit(at_seq)).write.mode("append").parquet(
-            self.closed_path
-        )
+        self.closed.append(open_df.withColumn(VALID_TO_COL, F.lit(at_seq)))
         self.open.truncate()
 
-    def apply_with_truncate_barrier(self, events: DataFrame) -> None:
+    def apply_with_truncate_barrier(self, events: DataFrame, trunc_seqs: list) -> None:
         """Apply a batch that may contain TRUNCATE markers, in order:
         unlike the merge target (where pre-truncate segments are
         skipped — nothing can observe them), the history must RECORD
         pre-truncate versions, so each segment is applied before its
-        truncate closes all open intervals."""
-        trunc_seqs = sorted(
-            r[0]
-            for r in events.filter(F.col(OPERATION_COL) == OP_TRUNCATE)
-            .select(SEQUENCE_COL)
-            .distinct()
-            .collect()
-        )
+        truncate closes all open intervals. ``trunc_seqs`` are the
+        batch's truncate sequences, which the caller's discovery pass
+        already collected."""
+        trunc_seqs = sorted(trunc_seqs)
         data = events.filter(F.col(OPERATION_COL) != OP_TRUNCATE)
         if not trunc_seqs:
             self.apply_batch(data)
@@ -355,7 +295,7 @@ class Scd2Table:
             to_append = newly_closed[0]
             for extra in newly_closed[1:]:
                 to_append = to_append.unionByName(extra, allowMissingColumns=True)
-            to_append.write.mode("append").parquet(self.closed_path)
+            self.closed.append(to_append)
 
             # 3. New open state: the key's last fresh event — INSERT/UPDATE
             #    upserts the new current version, DELETE removes the key.

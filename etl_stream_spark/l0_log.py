@@ -1,6 +1,20 @@
-"""The L0 append-log recipe, extracted once for every store that uses it.
+"""Append-only parquet logs, and the L0 append-log recipe built on them.
 
-Pattern (proven on the merge table, the postings index, and the IVF id
+:class:`ParquetLog` is every append-only parquet directory of the CDC
+stack: the landing (``cdc/pipeline.py::LandingTable``), the SCD2 closed
+zone, a table's quarantine, its erasure list, forget's extra paths, and
+each store's L0 delta log. It owns the one writer (``append``, under
+the log's partition columns), the one listing (``files``), the one
+reader (``read``: a ``mergeSchema`` read of exactly the listed files,
+None when there is none) and the one row delete (``delete_rows``: find
+the files holding the rows and count them in one pass, rewrite only
+those files, under their own partition layout). The log keeps no file
+list beside the directory, so a streaming writer lands through
+``append`` from ``foreachBatch``: a file sink's ``_spark_metadata``
+log would go on naming files a row delete replaced.
+
+:class:`L0AppendLog` is a flat ``ParquetLog`` plus the sweep gate. The
+pattern (proven on the merge table, the postings index, and the IVF id
 map): a per-batch ``partitionBy`` committer plus an eager merge in a
 store's hot path becomes
 
@@ -17,10 +31,8 @@ store's hot path becomes
   duplicates by key/generation, which is what makes the drain's crash
   window (consumed rows existing twice) harmless.
 
-This module owns the list/sweep/drain bookkeeping — the two private
-copies it replaced had already diverged once (the same sweep-gate fix
-had to be applied to both); the drain itself stays with each store
-because what "folding into the layout" means is store-specific.
+The drain itself stays with each store because what "folding into the
+layout" means is store-specific.
 
 Restart behavior: the appends-since-sweep counter seeds itself from the
 CURRENT L0 file count on an instance's first sweep check (one listing
@@ -42,9 +54,11 @@ when these moved off parquet datasets).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -124,47 +138,164 @@ def write_small_text(spark: SparkSession, path: str, text: str) -> None:
         fs.delete(old, False)
 
 
-class L0AppendLog:
-    """One flat parquet directory of un-drained append batches plus the
+def partition_cols_of(base_path: str, file_path: str) -> list[str]:
+    """Hive-style partition column names between ``base_path`` and a
+    data file, in directory order (``.../dt=2020/hr=3/part-0.parquet``
+    → ``['dt', 'hr']``). Pure path arithmetic — no listing."""
+    base = _strip_scheme(base_path)
+    rel = _strip_scheme(file_path)
+    if rel.startswith(base):
+        rel = rel[len(base):].strip("/")
+    parts = rel.split("/")[:-1]
+    return [p.split("=", 1)[0] for p in parts if "=" in p]
+
+
+def _strip_scheme(p: str) -> str:
+    head = p.split("/", 1)[0]
+    return os.path.normpath(p.split(":", 1)[1]) if ":" in head else os.path.normpath(p)
+
+
+def _select(df: DataFrame, where: Column | DataFrame, kept: bool = False) -> DataFrame:
+    """The rows of ``df`` that :meth:`ParquetLog.delete_rows` removes
+    (``kept``: the rest)."""
+    if isinstance(where, DataFrame):
+        how = "left_anti" if kept else "left_semi"
+        return df.join(where, on=where.columns, how=how)
+    doomed = F.coalesce(where, F.lit(False))
+    return df.filter(~doomed if kept else doomed)
+
+
+class ParquetLog:
+    """An append-only parquet directory: the landing, the SCD2 closed
+    zone, a quarantine, an erasure list, an L0 delta log. One writer,
+    one listing, one reader and one row delete serve them all.
+
+    The log keeps no file list of its own: :meth:`files` lists the
+    directory, so a row delete that replaces files is seen by the next
+    read at once. (A streaming file sink's ``_spark_metadata`` log would
+    go on naming the replaced files; streams land through
+    :meth:`append` from ``foreachBatch`` instead.)"""
+
+    def __init__(
+        self, spark: SparkSession, path: str, partition_cols: Sequence[str] = ()
+    ) -> None:
+        self.spark = spark
+        self.path = path.rstrip("/")
+        self.partition_cols = tuple(partition_cols)
+
+    def exists(self) -> bool:
+        """ONE FS existence check."""
+        fs, p = _hadoop_fs(self.spark, self.path)
+        return fs.exists(p)
+
+    def append(self, df: DataFrame) -> None:
+        """One append job, under the log's partition columns."""
+        self._write(df, self.partition_cols)
+
+    def _write(self, df: DataFrame, partition_cols: Sequence[str]) -> None:
+        writer = df.write.mode("append")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(self.path)
+
+    def files(self) -> list[str]:
+        """Data files in the log: ONE listing RPC per directory. Names
+        Spark's reader hides (``_SUCCESS``, ``_temporary``, ``.crc``)
+        are skipped; ``k=v`` partition directories are descended, so a
+        flat log is one listing."""
+        fs, root = _hadoop_fs(self.spark, self.path)
+        if not fs.exists(root):
+            return []
+        out, dirs = [], [root]
+        while dirs:
+            for st in fs.listStatus(dirs.pop()):
+                p = st.getPath()
+                name = p.getName()
+                if name.startswith(".") or (name.startswith("_") and "=" not in name):
+                    continue
+                if not st.isDirectory():
+                    out.append(p.toString())
+                elif "=" in name:
+                    dirs.append(p)
+        return out
+
+    def _read(self, files: list[str]) -> DataFrame:
+        return (
+            self.spark.read.option("mergeSchema", "true")
+            .option("basePath", self.path)
+            .parquet(*files)
+        )
+
+    def read(self) -> DataFrame | None:
+        """Every row in the log with the union of its files' columns
+        (a file written before a column existed reads NULL for it), and
+        its partition columns; None when the log holds no data file."""
+        files = self.files()
+        return self._read(files) if files else None
+
+    def delete_rows(self, where: Column | DataFrame) -> int:
+        """Remove the selected rows and return how many went: the rows
+        ``where`` holds for, or, given a frame of key tuples, the rows
+        whose key columns equal one of them (a NULL key matches none).
+
+        One pass over the log finds the files holding such rows and
+        counts the rows; only those files are rewritten, under their own
+        partition layout. Concurrent-append safe: the retained rest of
+        exactly those files is appended as new files, then those files
+        are deleted, so an append landing meanwhile is never touched.
+        Crash window: between the rewrite and the deletes, the retained
+        rows exist twice, and re-running the delete keeps both copies:
+        the landing's merge resolves them by sequence, an erasure list
+        reads distinct."""
+        files = self.files()
+        if not files:
+            return 0
+        found = (
+            _select(self._read(files).withColumn("_file", F.input_file_name()), where)
+            .agg(F.count(F.lit(1)).alias("n"), F.collect_set("_file").alias("files"))
+            .first()
+        )
+        if found.n == 0:
+            return 0
+        # input_file_name() is a URL-encoded URI; the listing names paths
+        jvm = self.spark.sparkContext._jvm
+        hit_files = {
+            jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(u)).toString()
+            for u in found.files
+        }
+        doomed_files = [f for f in files if f in hit_files]
+        # persisted: isEmpty and the write would each scan the files
+        retained = _select(self._read(doomed_files), where, kept=True).persist()
+        try:
+            if not retained.isEmpty():
+                self._write(retained, partition_cols_of(self.path, doomed_files[0]))
+        finally:
+            retained.unpersist()
+        self.delete_files(doomed_files)
+        return found.n
+
+    def delete_files(self, files: list[str]) -> None:
+        """Remove ``files``; the caller must have materialized (written
+        or checkpointed) whatever of their contents it keeps."""
+        fs, _ = _hadoop_fs(self.spark, self.path)
+        for f in files:
+            fs.delete(_hadoop_path(self.spark, f), False)
+
+
+class L0AppendLog(ParquetLog):
+    """A flat :class:`ParquetLog` of un-drained append batches plus the
     counter-gated sweep that decides when to drain it.
 
     The owner supplies the drain (store-specific fold into the real
-    layout) and the read-side collapse; this class owns listing,
-    appending, the sweep gate, and file deletion — the machinery that
-    must never diverge between stores."""
+    layout) and the read-side collapse; this class owns the sweep gate
+    — the machinery that must never diverge between stores."""
 
     def __init__(self, spark: SparkSession, path: str, sweep_threshold: int) -> None:
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.sweep_threshold = sweep_threshold
         #: None until the first sweep check seeds it from the listing —
         #: the restart-resume behavior documented in the module header
         self._appends_since_sweep: int | None = None
-
-    def files(self) -> list[str]:
-        """Data files currently in the log — ONE listing RPC."""
-        fs, _ = _hadoop_fs(self.spark, self.path)
-        p = _hadoop_path(self.spark, self.path)
-        if not fs.exists(p):
-            return []
-        return [
-            st.getPath().toString()
-            for st in fs.listStatus(p)
-            if st.getPath().getName().endswith(".parquet")
-        ]
-
-    def append(self, df: DataFrame) -> None:
-        """One shuffle-free append job — the L0 hot path."""
-        df.write.mode("append").parquet(self.path)
-
-    def read(self) -> DataFrame | None:
-        """All un-drained rows (None when the log is empty). Bounded by
-        the sweep cadence — at most ``sweep_threshold`` batches — so
-        readers pay a small bounded scan, never a table scan."""
-        files = self.files()
-        if not files:
-            return None
-        return self.spark.read.parquet(*files)
 
     def maybe_sweep(self, drain: Callable[[], None]) -> None:
         """Counter-gated sweep: once ``sweep_threshold`` appends have
@@ -184,17 +315,10 @@ class L0AppendLog:
             return
         self._appends_since_sweep = 0
         # >=, not >: with one file per append the sweep must drain the
-        # very check it fires on, or L0 would coast to ~2x the bound
-        # read() documents before the next sweep
+        # very check it fires on, or L0 would coast to ~2x the
+        # threshold before the next sweep
         if len(self.files()) >= self.sweep_threshold:
             drain()
-
-    def delete_files(self, files: list[str]) -> None:
-        """Remove consumed files after a drain — the drain must have
-        materialized (written or checkpointed) their contents first."""
-        fs, _ = _hadoop_fs(self.spark, self.path)
-        for f in files:
-            fs.delete(_hadoop_path(self.spark, f), False)
 
     def clear(self) -> None:
         """Drop the whole log (rebuild/truncate path) and reset the

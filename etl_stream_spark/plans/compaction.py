@@ -21,58 +21,13 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
+from etl_stream_spark.l0_log import partition_cols_of
+
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
-
-
-def _strip_scheme(p: str) -> str:
-    head = p.split("/", 1)[0]
-    return os.path.normpath(p.split(":", 1)[1]) if ":" in head else os.path.normpath(p)
-
-
-def partition_cols_of(base_path: str, file_path: str) -> list[str]:
-    """Hive-style partition column names between ``base_path`` and a
-    data file, in directory order (``.../dt=2020/hr=3/part-0.parquet``
-    → ``['dt', 'hr']``). Pure path arithmetic — no listing."""
-    base = _strip_scheme(base_path)
-    rel = _strip_scheme(file_path)
-    if rel.startswith(base):
-        rel = rel[len(base):].strip("/")
-    parts = rel.split("/")[:-1]
-    return [p.split("=", 1)[0] for p in parts if "=" in p]
-
-
-def replace_parquet_files(spark: SparkSession, base_path: str, files, keep) -> None:
-    """Rewrite exactly ``files`` under ``base_path``: append
-    ``keep(subset)`` as new files — PRESERVING any Hive-style partition
-    layout discovered from the file paths (an unpartitioned append into
-    a partitioned directory corrupts it for every future read) — then
-    delete the originals. Concurrent-append safe (the landing-purge
-    protocol): rows appended during the rewrite are never touched.
-    Crash window: before the deletes, retained rows exist twice —
-    recovery is re-running the same rewrite."""
-    from etl_stream_spark.l0_log import _hadoop_fs, _hadoop_path
-
-    files = list(files)
-    if not files:
-        return
-    subset = (
-        spark.read.option("mergeSchema", "true")
-        .option("basePath", base_path)
-        .parquet(*files)
-    )
-    pcols = partition_cols_of(base_path, files[0])
-    retained = keep(subset).persist()  # isEmpty + append: one scan
-    try:
-        if not retained.isEmpty():
-            writer = retained.write.mode("append")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(base_path)
-    finally:
-        retained.unpersist()
-    fs, _ = _hadoop_fs(spark, base_path)
-    for f in files:
-        fs.delete(_hadoop_path(spark, f), False)
+#: bin jobs of one :func:`compact_clustered` in flight at once: enough to
+#: hide per-job scheduling constants, few enough not to starve a shared
+#: scheduler
+MAX_PARALLEL_BINS = 8
 
 
 def parquet_files(path: str) -> list[tuple[str, int]]:
@@ -117,8 +72,8 @@ def _require_unpartitioned(path: str, files: list[tuple[str, int]], op: str) -> 
     VALUES live only in the directory names, so a whole-directory
     rewrite that stages outputs flat would silently drop (or
     NULL-infer) those columns for every future read.
-    :func:`replace_parquet_files` preserves the layout per-file-set;
-    the whole-directory compactors below do not — route partitioned
+    ``l0_log.py::ParquetLog.delete_rows`` preserves the layout per
+    file set; the whole-directory compactors below do not — route partitioned
     tables through per-partition calls instead (one call per leaf
     directory keeps the dirname, and bin locality, intact)."""
     for fpath, _b in files:
@@ -200,11 +155,7 @@ def compact_clustered(
         shutil.rmtree(tmp)
         return 1
 
-    # Bin jobs in flight at once: enough to hide per-job scheduling
-    # constants, few enough not to starve a shared scheduler. Env-
-    # parameterised (local default 8); 1 = the sequential plan.
-    workers = int(os.environ.get("ETL_COMPACT_BIN_THREADS", "8"))
-    with ThreadPoolExecutor(max_workers=max(1, min(workers, len(bins)))) as pool:
+    with ThreadPoolExecutor(max_workers=min(MAX_PARALLEL_BINS, len(bins))) as pool:
         rewritten = sum(pool.map(_pack, enumerate(bins)))
     old = f"{stage}_old"
     os.rename(path, old)

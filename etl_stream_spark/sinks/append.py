@@ -3,8 +3,9 @@
 * Landing append — the ``LANDING_<T>`` bronze log (Snowpipe Streaming
   append, ``etl-snowflake-py/etl_snowflake/client.py:573-685``; Iceberg
   fast-append, ``etl-destination/src/iceberg/client.rs:296-393``) maps to
-  ``writeStream`` append-mode parquet with snappy compression; the
-  channel offset-token resume maps to ``checkpointLocation``.
+  a ``foreachBatch`` append through
+  :class:`~etl_stream_spark.cdc.pipeline.LandingTable`; the channel
+  offset-token resume maps to ``checkpointLocation``.
 * Merge-apply — BigQuery server-side CDC upserts
   (``etl-destination/src/bigquery/client.rs:343-440``) map to a
   ``foreachBatch`` driving :class:`~etl_stream_spark.cdc.pipeline.
@@ -19,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from etl_stream_spark.cdc.pipeline import CdcBatchApplier
+from etl_stream_spark.cdc.pipeline import CdcBatchApplier, LandingTable
 
 
 def _trigger(writer, trigger_interval_ms: int | None, available_now: bool):
@@ -38,16 +39,16 @@ def start_landing_stream(
     trigger_interval_ms: int | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
-    """Append-only bronze landing stream (K1/K3)."""
-    writer = (
-        events.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .option("compression", "snappy")
-    )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
+    """Append-only bronze landing stream (K1/K3): each micro-batch is
+    appended through the landing's :class:`LandingTable`, whose purge
+    the landing's next read sees because no file sink keeps a
+    ``_spark_metadata`` list beside it. At-least-once: an epoch replayed
+    after a crash lands twice, which ``MergeTask``'s sequence resolution
+    absorbs."""
+    landing = LandingTable(events.sparkSession, path, partition_cols)
+    writer = events.writeStream.foreachBatch(
+        lambda df, _epoch: landing.append(df)
+    ).option("checkpointLocation", checkpoint)
     return _trigger(writer, trigger_interval_ms, available_now).start()
 
 

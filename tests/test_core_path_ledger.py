@@ -10,7 +10,10 @@ core path fails here, and one that removes a job updates the pins.
 
 Jobs are counted by the job-id delta around each batch, read after the
 listener bus drains. Job groups are thread-local and would miss the
-jobs the applier's per-table pool threads submit. The same job range
+jobs the applier's per-table pool threads submit. The delta runs from
+the highest job id of any group, and every job in it must carry no
+group: a job another test's stream runs (in its query's group) fails
+the measurement instead of landing in a pin. The same job range
 also gives the source input records per change row, summed from the
 status store the way ``perfbench/run.py::StatusCounters`` sums them:
 every record a non-skipped stage reads, from a file or from a cached
@@ -58,10 +61,29 @@ MOR_INPUT_RECORDS_PER_ROW = 4.91
 EAGER_INPUT_RECORDS_PER_ROW = 3.87
 
 
+#: jobs of a one-row update batch for one eager table with an SCD2
+#: history, all on the calling thread: the fused discovery, the
+#: history's apply (open-zone bucket probe and read, closed-zone
+#: append, open-zone merge) and the target's merge. The history takes
+#: its truncate sequences from the discovery (25 while it collected
+#: them again).
+HISTORY_BATCH_JOBS = 24
+
+
 def _last_job(spark) -> int:
+    """The highest job id the application has run, whatever its group
+    (the status store lists jobs by descending id)."""
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def _assert_quiet(spark) -> None:
+    """No stream and no job is running: nothing but the measured call
+    can add jobs to the delta."""
+    assert not spark.streams.active, spark.streams.active
+    assert not spark.sparkContext.statusTracker().getActiveJobsIds()
 
 
 def jobs_of(spark, fn):
@@ -157,11 +179,15 @@ def _run(spark, root, tables, merge_on_read, n_batches, rows_per_table, seed):
         frames.append(spark.read.schema("value string").parquet(path))
     # the main thread may carry a job group left by an earlier test
     spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    _assert_quiet(spark)
     jobs, records = [], 0
     for epoch, raw in enumerate(frames):
         j0 = _last_job(spark)
         app.apply_batch(decode_cdc_json(raw, PAYLOAD), epoch)
         j1 = _last_job(spark)
+        ours = set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+        stray = [j for j in range(j0 + 1, j1 + 1) if j not in ours]
+        assert not stray, f"jobs of another group ran during the batch: {stray}"
         jobs.append(j1 - j0)
         records += _input_records(spark, j0 + 1, j1)
     for t in tables:
@@ -181,3 +207,33 @@ def test_core_path_job_ledger(spark, tmp_path):
     assert mor_records == MOR_INPUT_RECORDS_PER_ROW, mor_records
     assert eager == [EAGER_FIRST_JOBS, EAGER_JOBS, EAGER_JOBS], eager
     assert eager_records == EAGER_INPUT_RECORDS_PER_ROW, eager_records
+
+
+def test_history_batch_jobs(spark, tmp_path):
+    """A batch for one table with an SCD2 history takes the truncate
+    sequences from the applier's discovery pass: the history runs no
+    collect of its own for them."""
+    from etl_stream_spark.cdc import OP_INSERT, OP_UPDATE
+    from etl_stream_spark.cdc.scd2 import Scd2Table
+
+    hist = Scd2Table(spark, str(tmp_path / "hist"), keys=["id"], num_buckets=4)
+    app = CdcBatchApplier(
+        spark,
+        str(tmp_path / "silver"),
+        {"t": CdcTableConfig(keys=["id"], num_buckets=4)},
+        histories={"t": hist},
+    )
+
+    def batch(rows):
+        return spark.createDataFrame(
+            rows, "id long, v long, operation string, sequence string, table string"
+        )
+
+    app.apply_batch(batch([(1, 10, OP_INSERT, f"{1:020d}", "t")]))
+    update = batch([(1, 11, OP_UPDATE, f"{2:020d}", "t")])
+    _, jobs = jobs_of(spark, lambda: app.apply_batch(update))
+    assert jobs == HISTORY_BATCH_JOBS, jobs
+    assert {(r.id, r.v, r.is_current) for r in hist.read().collect()} == {
+        (1, 10, False),
+        (1, 11, True),
+    }
